@@ -207,23 +207,36 @@ def budgeted_per_query(
         + [(t, name, False) for name, t in sweep.items()],
         key=lambda x: (-x[0], x[1]),
     )
-    # upper bound for the disclosure fields while filling: the counts
-    # and summed seconds can only SHRINK as entries are admitted, so
-    # checking the budget against the all-omitted render is safe
+    # fill against the all-omitted disclosure values: the counts and
+    # summed seconds can only SHRINK as entries are admitted
     max_q_om, max_s_om = sum(timings.values()), sum(sweep.values())
-    taken: set[tuple[str, bool]] = set()
+    taken: list[tuple[str, bool]] = []  # admission order: slowest first
     for t, name, is_headline in merged:
         part = q_part if is_headline else s_part
         part[name] = round(t, 2)
         if len(render(len(timings), len(sweep), max_q_om, max_s_om)) > budget:
             del part[name]
             break
-        taken.add((name, is_headline))
-    nq_om = len(timings) - len(q_part)
-    ns_om = len(sweep) - len(s_part)
-    q_om = sum(t for n, t in timings.items() if (n, True) not in taken)
-    s_om = sum(t for n, t in sweep.items() if (n, False) not in taken)
-    return render(nq_om, ns_om, q_om, s_om)
+        taken.append((name, is_headline))
+
+    def render_final() -> str:
+        admitted = set(taken)
+        return render(
+            len(timings) - len(q_part),
+            len(sweep) - len(s_part),
+            sum(t for n, t in timings.items() if (n, True) not in admitted),
+            sum(t for n, t in sweep.items() if (n, False) not in admitted),
+        )
+
+    # a smaller omitted sum can still serialize LONGER (19.99 vs 20.0),
+    # so the fill bound is not a length bound: re-check the final line
+    # and evict the cheapest admitted entries until it fits
+    line = render_final()
+    while len(line) > budget and taken:
+        name, is_headline = taken.pop()
+        del (q_part if is_headline else s_part)[name]
+        line = render_final()
+    return line
 
 
 def emit_detail(full: dict, detail_path: str) -> None:

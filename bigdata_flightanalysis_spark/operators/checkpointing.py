@@ -226,6 +226,14 @@ def loop_width(spark: SparkSession, est_bytes: float) -> int:
     ~2-3x total cores on a cluster). Derived from input size rather
     than a constant, so tiny local runs get single-task rounds while a
     100 TB edge list fans out to the cluster's full width (guide
-    §2.2/§2.5: partition counts must follow data, not config)."""
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    §2.2/§2.5: partition counts must follow data, not config).
+
+    A non-numeric ``spark.sql.shuffle.partitions`` (``auto`` on some
+    managed platforms) caps at ``defaultParallelism`` instead. Call it
+    outside :func:`static_partitioning_scope`, which pins that conf to
+    a loop's width and would be read back as the cap."""
+    try:
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        cap = spark.sparkContext.defaultParallelism
     return max(1, min(cap, -(-int(est_bytes) // LOOP_PARTITION_BYTES)))

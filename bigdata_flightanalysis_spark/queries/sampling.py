@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_flightanalysis_spark.functions.text import md5_long, md5_long_sql
+from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.sources.readers import read_table
 
@@ -262,7 +263,7 @@ def alpha_keep_probs(docs: DataFrame) -> DataFrame:
     # ExistingRDD aggregate subtrees over the survivor frame). The
     # pinned frame is language-cardinality rows — pennies to hold —
     # and every downstream leg (all ≤ n_langs rows) reads it instead.
-    per_lang = docs.groupBy("lang").agg(F.count("*").alias("n")).localCheckpoint()
+    per_lang = eager_checkpoint(docs.groupBy("lang").agg(F.count("*").alias("n")))
     tot = per_lang.agg(F.sum("n").alias("total"))
     sq = per_lang.join(F.broadcast(tot)).select(
         "lang",
@@ -424,10 +425,6 @@ def doc_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("best.q").alias("n_chars"),
         )
     )
-    from bigdata_flightanalysis_spark.operators.checkpointing import (
-        eager_checkpoint,
-    )
-
     # materialized ONCE: both alpha_keep_probs' aggregate and the
     # final mixture join consume surv, and without the checkpoint the
     # label join + survivor struct-max (corpus-sized shuffles) execute

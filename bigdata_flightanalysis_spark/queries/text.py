@@ -1351,11 +1351,17 @@ def doc_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_flightanalysis_spark.sources.readers import table_bytes
 
     if table_bytes(sf_dir, "documents") >= MATERIALIZE_SIGNATURES_BYTES:
+        from bigdata_flightanalysis_spark.operators.checkpointing import (
+            eager_checkpoint,
+        )
+
         da, db = F.col("da.d"), F.col("db.d")
         a_first = (da < db) | (
             (da == db) & (F.col("doc_a") < F.col("doc_b"))
         )
-        eo = (
+        # materialized once: the triple self-join below reads it three
+        # times, and the orientation joins must not re-execute per scan
+        eo = eager_checkpoint(
             e.join(deg.alias("da"), F.col("da.node") == F.col("doc_a"))
             .join(deg.alias("db"), F.col("db.node") == F.col("doc_b"))
             .select(
@@ -1369,10 +1375,6 @@ def doc_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # pair ordering below
                 F.when(a_first, db).otherwise(da).alias("dd"),
             )
-            # materialized once: the triple self-join below reads it
-            # three times, and the orientation joins must not
-            # re-execute per scan
-            .localCheckpoint()
         )
 
         t1 = eo.alias("t1")

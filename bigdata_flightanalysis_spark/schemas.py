@@ -87,6 +87,8 @@ FUTURE_DATA = T.StructType(
 
 # --------------------------------------------------------------------------
 # B. Driver synthetic star schema (FIXTURES.md §B) — matches parquet footers.
+#    Exception: the files' timestamps read as TIMESTAMP_NTZ
+#    (tests/test_scan_schemas.py).
 # --------------------------------------------------------------------------
 
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {

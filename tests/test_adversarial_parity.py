@@ -556,15 +556,18 @@ def test_q16_empty_not_in_build_keeps_null_fk_rows(
 @pytest.fixture(scope="module")
 def edge_bigmoney_dir(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("edge_bigmoney")
+    # key columns use the TESTDATA_SCHEMAS types: read_table scans the
+    # timestamp-free tables with their declared schema, and a parquet
+    # INT64 column does not read as a declared int
     spark.createDataFrame(
-        [(1, "AMERICA")], "r_regionkey bigint, r_name string"
+        [(1, "AMERICA")], "r_regionkey int, r_name string"
     ).write.mode("overwrite").parquet(f"{base}/region.parquet")
     spark.createDataFrame(
         [(1, "BRAZIL", 1), (2, "CANADA", 1)],
-        "n_nationkey bigint, n_name string, n_regionkey bigint",
+        "n_nationkey int, n_name string, n_regionkey int",
     ).write.mode("overwrite").parquet(f"{base}/nation.parquet")
     spark.createDataFrame(
-        [(1, 1), (2, 2)], "c_custkey bigint, c_nationkey bigint"
+        [(1, 1), (2, 2)], "c_custkey bigint, c_nationkey int"
     ).write.mode("overwrite").parquet(f"{base}/customer.parquet")
     # Addends stay REALISTIC (~6e8, far below the ~4.5e9 boundary
     # where the per-addend double→decimal cast itself becomes
@@ -608,7 +611,7 @@ def edge_bigmoney_dir(spark, tmp_path_factory):
     ).write.mode("overwrite").parquet(f"{base}/part.parquet")
     spark.createDataFrame(
         [(1, "S1", 5.0, 1), (2, "S2", 10.0, 1)],
-        "s_suppkey bigint, s_name string, s_acctbal double, s_nationkey bigint",
+        "s_suppkey bigint, s_name string, s_acctbal double, s_nationkey int",
     ).write.mode("overwrite").parquet(f"{base}/supplier.parquet")
     # q20 flows: supplier 1 carries >half of part 1's huge flow; pair
     # sums ~1e10 from realistic ~4e8 addends (same boundary note)

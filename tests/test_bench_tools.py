@@ -331,6 +331,23 @@ def test_budgeted_per_query_fits_tail_with_contract_line():
     assert payload["value"] == round(sum(timings.values()), 4)
 
 
+def test_budgeted_per_query_final_line_never_exceeds_budget():
+    """The budget is strict on the FINAL render. The fill loop checks
+    against the all-omitted disclosure values, and a smaller omitted
+    sum can serialize longer ('100.0' vs '99.99' class of digit
+    shapes): here both maps sum to 20.0 ('20.0') and admitting the
+    slowest entry leaves 10.25 ('10.25'). Every budget the all-omitted
+    line fits must bound the emitted line."""
+    bench = _load_bench()
+    timings = {"q_a": 9.75, "q_b": 5.125, "q_c": 5.125}
+    sweep = {"s_a": 9.75, "s_b": 5.125, "s_c": 5.125}
+    floor = len(bench.budgeted_per_query(timings, sweep, 0.1, budget=0))
+    full = len(bench.budgeted_per_query(timings, sweep, 0.1, budget=10**6))
+    for budget in range(floor, full + 3):
+        line = bench.budgeted_per_query(timings, sweep, 0.1, budget=budget)
+        assert len(line) <= budget, (budget, line)
+
+
 def test_budgeted_per_query_small_registry_keeps_everything():
     bench = _load_bench()
     timings = {"q1": 1.2345, "q2": 0.5}

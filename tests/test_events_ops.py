@@ -101,12 +101,15 @@ def test_referential_integrity_report_fires_on_orphans(spark, tmp_path):
             f"{tmp_path}/{name}.parquet"
         )
 
-    w("region", [(0,)], "r_regionkey bigint")
+    # key columns use the TESTDATA_SCHEMAS types: read_table scans the
+    # timestamp-free tables with their declared schema, and a parquet
+    # INT64 column does not read as a declared int
+    w("region", [(0,)], "r_regionkey int")
     # nation 1 points at a missing region
-    w("nation", [(0, 0), (1, 99)], "n_nationkey bigint, n_regionkey bigint")
+    w("nation", [(0, 0), (1, 99)], "n_nationkey int, n_regionkey int")
     # customer 2 points at a missing nation
-    w("customer", [(1, 0), (2, 5)], "c_custkey bigint, c_nationkey bigint")
-    w("supplier", [(200, 0)], "s_suppkey bigint, s_nationkey bigint")
+    w("customer", [(1, 0), (2, 5)], "c_custkey bigint, c_nationkey int")
+    w("supplier", [(200, 0)], "s_suppkey bigint, s_nationkey int")
     w("part", [(100,)], "p_partkey bigint")
     # order 11 -> missing customer; order 12 has a NULL FK
     w(

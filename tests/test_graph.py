@@ -375,6 +375,26 @@ def test_loop_width_is_size_derived(spark):
     assert loop_width(spark, 100 * 1024**4) == cap
 
 
+def test_loop_width_caps_at_default_parallelism_on_non_numeric_conf():
+    """A platform value such as ``auto`` for spark.sql.shuffle.partitions
+    must not crash the loop operators: the cap falls back to the
+    context's defaultParallelism."""
+    from types import SimpleNamespace
+
+    from bigdata_flightanalysis_spark.operators.checkpointing import (
+        LOOP_PARTITION_BYTES,
+        loop_width,
+    )
+
+    stub = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key: "auto"),
+        sparkContext=SimpleNamespace(defaultParallelism=3),
+    )
+    assert loop_width(stub, 0) == 1
+    assert loop_width(stub, LOOP_PARTITION_BYTES + 1) == 2
+    assert loop_width(stub, 100 * 1024**4) == 3
+
+
 def test_pagerank_checkpoints_capture_loop_partitioning(spark):
     """r17 co-partitioning contract: the returned rank frame's
     checkpoint carries hashpartitioning(node, P) + node-ascending
