@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata_flightanalysis_spark.functions.text import md5_long, normalize_text
+from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
 
 
 # What the exact-dedup fingerprint store's rows are a function of; a
@@ -48,7 +49,7 @@ from bigdata_flightanalysis_spark.util import path_lock as _store_lock
 
 def _serialized_on_store(fn):
     """Run ``fn`` holding the lock of its ``*_path`` argument. The
-    eager localCheckpoints inside each ingest pin the returned frames
+    eager checkpoints inside each ingest pin the returned frames
     to the pre-append snapshot, so nothing reads the store after the
     lock is released."""
     sig = _inspect.signature(fn)
@@ -147,11 +148,11 @@ def _recover_pending_batch(
     changed (out of contract) is discarded — the store is exactly as
     if that staging never started.
 
-    The recorded survivor frame is MATERIALIZED (eager
-    ``localCheckpoint``) before returning, matching the fresh path's
-    pinning contract: the pending dir it reads is rmtree'd by the NEXT
-    batch's recovery sweep, so a lazy frame consumed after that batch
-    starts would fail with FileNotFound."""
+    The recorded survivor frame is MATERIALIZED (eager checkpoint)
+    before returning, matching the fresh path's pinning contract: the
+    pending dir it reads is rmtree'd by the NEXT batch's recovery
+    sweep, so a lazy frame consumed after that batch starts would fail
+    with FileNotFound."""
     import shutil as _shutil
 
     from bigdata_flightanalysis_spark.util import read_sidecar
@@ -167,9 +168,7 @@ def _recover_pending_batch(
         _discard(pending + ".meta.json")
         return None
     _finalize_pending_fps(spark, state_path, pending, content_fp)
-    return (
-        spark.read.parquet(pending).select("id").localCheckpoint(eager=True)
-    )
+    return eager_checkpoint(spark.read.parquet(pending).select("id"))
 
 
 def _discard(path: str) -> None:
@@ -228,12 +227,11 @@ def incremental_exact_dedup(
     not row numbers (same identity contract as the band and embedding
     stores' update rule).
 
-    The survivor set is MATERIALIZED (eager ``localCheckpoint``)
-    before the append: the anti-join plan reads ``state_path``, so a
-    lazy return value re-evaluated after the append (file-listing
-    refresh, cache eviction, checkpoint loss) would anti-join the
-    batch against its own just-appended fingerprints and come back
-    empty. After materialization the returned frame is pinned to the
+    The survivor set is MATERIALIZED (eager checkpoint) before the
+    append: the anti-join plan reads ``state_path``, so a lazy return
+    value re-evaluated after the append (file-listing refresh, cache
+    eviction, checkpoint loss) would anti-join the batch against its
+    own just-appended fingerprints and come back empty. After materialization the returned frame is pinned to the
     pre-append snapshot regardless of when the caller collects it.
     """
     # the store's fingerprints are a function of the (normalize, hash)
@@ -252,14 +250,13 @@ def incremental_exact_dedup(
     )
     fps = fingerprint_docs(new_docs, id_col, text_col)
     w = Window.partitionBy("fp").orderBy("id")
-    batch_unique = (
+    # materialized ONCE: _batch_fingerprint's action and the
+    # store anti-join below otherwise each re-run the full
+    # normalize+hash pass and the row_number shuffle (r16 review)
+    batch_unique = eager_checkpoint(
         fps.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        # materialized ONCE: _batch_fingerprint's action and the
-        # store anti-join below otherwise each re-run the full
-        # normalize+hash pass and the row_number shuffle (r16 review)
-        .localCheckpoint(eager=True)
     )
     content_fp = _batch_fingerprint(batch_unique)
     pending = state_path + ".pending"
@@ -283,7 +280,7 @@ def incremental_exact_dedup(
         fresh = batch_unique.join(seen, "fp", "left_anti")
     else:
         fresh = batch_unique
-    fresh = fresh.localCheckpoint(eager=True)
+    fresh = eager_checkpoint(fresh)
     if batch_id is not None:
         # Stage (fp, id) + batch marker, THEN land the fps as one
         # atomic file. Meta is written only after the staging job
@@ -366,7 +363,7 @@ def incremental_near_dup_pairs(
     batch-vs-batch).
 
     Replay safety: the batch's bands are materialized (eager
-    ``localCheckpoint``) BEFORE the append, pinning the returned pairs
+    checkpoint) BEFORE the append, pinning the returned pairs
     to the pre-append store snapshot; the append itself anti-joins the
     store first, so replaying a batch whose append committed neither
     duplicates store rows nor changes the emitted pair set (pairs are
@@ -407,7 +404,7 @@ def incremental_near_dup_pairs(
     docs = new_docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    batch_bands = _band_frame(_signatures_of(docs)).localCheckpoint(eager=True)
+    batch_bands = eager_checkpoint(_band_frame(_signatures_of(docs)))
     if os.path.exists(store_path):
         store = spark.read.parquet(store_path)
         probe = store.unionByName(batch_bands)
@@ -426,7 +423,7 @@ def incremental_near_dup_pairs(
         probe = batch_bands
         to_append = batch_bands
     a, b = batch_bands.alias("a"), probe.alias("b")
-    pairs = (
+    pairs = eager_checkpoint(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -438,7 +435,6 @@ def incremental_near_dup_pairs(
             F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     to_append.write.mode("append").parquet(store_path)
     _record_store_meta(
@@ -521,12 +517,14 @@ def incremental_embed_near_dup_pairs(
         n_planes = NEAR_DUP_PLANES
     _recover_store_dir(store_path)
     _check_store_granularity(store_path, n_planes)
-    batch = new_vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(emb_col).cast("array<double>").alias("e"),
-        l2_norm(F.col(emb_col)).alias("nrm"),
-        _spark_bucket(F.col(emb_col), n_planes).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    batch = eager_checkpoint(
+        new_vectors.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(emb_col).cast("array<double>").alias("e"),
+            l2_norm(F.col(emb_col)).alias("nrm"),
+            _spark_bucket(F.col(emb_col), n_planes).alias("bucket"),
+        )
+    )
     if os.path.exists(store_path):
         store = spark.read.parquet(store_path)
         probe = store.unionByName(batch)
@@ -540,15 +538,15 @@ def incremental_embed_near_dup_pairs(
         # materialized: the isEmpty() gate below and the append write
         # otherwise each run the store-probe anti-join (r16 review —
         # the flat-store paths already pay it once)
-        to_append = batch.join(
-            store, ["vec_id", "bucket"], "left_anti"
-        ).localCheckpoint(eager=True)
+        to_append = eager_checkpoint(
+            batch.join(store, ["vec_id", "bucket"], "left_anti")
+        )
     else:
         # batch is already checkpointed: isEmpty/write re-read blocks
         probe = batch
         to_append = batch
     a, b = batch.alias("a"), probe.alias("b")
-    pairs = (
+    pairs = eager_checkpoint(
         a.join(
             b,
             (F.col("a.bucket") == F.col("b.bucket"))
@@ -561,7 +559,6 @@ def incremental_embed_near_dup_pairs(
         )
         .filter(F.col("cosine") >= NEAR_DUP_TAU)
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # The store is LAID OUT by bucket (hive-partitioned directories):
     # the probe equi-joins on the partition column, so dynamic

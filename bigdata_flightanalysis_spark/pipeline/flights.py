@@ -280,13 +280,37 @@ def assemble_features(
     return assembler.transform(df).select(*out_cols)
 
 
+#: Unit-weight column :func:`fit_kmeans` adds to its training projection.
+_UNIT_WEIGHT_COL = "__kmeans_unit_weight"
+
+
 def fit_kmeans(df: DataFrame, k: int = 5, seed: int = 42):
     """KMeans fit (``Code/flight_analysis.py:135-137``). Iterative,
-    driver-coordinated; each Lloyd iteration is one distributed
-    aggregate — inherently scale-safe in Spark."""
+    driver-coordinated: every Lloyd iteration and every k-means||
+    initialization pass is one distributed scan of the training set.
+
+    MLlib owns the training cache. Spark ML's ``KMeans.fit`` runs
+    ``runWithWeight(instances, handlePersistence = dataset.storageLevel
+    == NONE)``: an uncached Dataset is decoded ONCE into MLlib's own
+    deserialized ``VectorWithNorm`` cache, which it unpersists when the
+    fit ends. A cached Dataset (``run_flight_pipeline`` persists the
+    assembled frames because ``transform`` reads them again) makes
+    MLlib cache only the vector norms, so every scan re-decodes each
+    row from the columnar cache (→ ``Row`` → ``VectorUDT`` → mllib
+    ``Vector``): one full decode per iteration.
+
+    So the fit gets a projection that is never a cached plan: the
+    features plus a unit-weight literal. A bare ``select("features")``
+    is not enough — on a cached frame holding only ``features`` the
+    CacheManager matches that projection (aliased or not) to the cached
+    plan and MLlib still sees it as cached. Unit weights leave the
+    centers and the training cost unchanged."""
     from pyspark.ml.clustering import KMeans
 
-    return KMeans(k=k, seed=seed, featuresCol="features").fit(df)
+    training = df.select("features", F.lit(1.0).alias(_UNIT_WEIGHT_COL))
+    return KMeans(
+        k=k, seed=seed, featuresCol="features", weightCol=_UNIT_WEIGHT_COL
+    ).fit(training)
 
 
 def silhouette(predictions: DataFrame) -> float:
@@ -459,12 +483,13 @@ def run_flight_pipeline(
     prepped_23 = add_delay_label(
         prep_features_2023(clean_flights_2023(raw_2023, mode)), "DelayMinutes"
     )
-    # The assembled frames fan out to MANY actions (kmeans fit scans
-    # them iteratively, then transform; the predictions feed the eager
+    # The assembled frames are read twice (the kmeans fit decodes them
+    # once into MLlib's own training cache — see fit_kmeans — then
+    # transform reads them again; the predictions feed the eager
     # silhouette here plus the reason counts and every sink write the
     # caller runs) — persist so each is computed once instead of
     # re-running the whole clean→prep→sanitize→assemble lineage from
-    # the raw scan per action. MEMORY_AND_DISK (persist default)
+    # the raw scan per read. MEMORY_AND_DISK (persist default)
     # spills rather than OOMs at scale.
     assembled_19 = assemble_features(
         prepped_19, keep_cols=("CancellationReason",), mode=mode
@@ -478,7 +503,7 @@ def run_flight_pipeline(
     pred_23 = model_23.transform(assembled_23).persist()
     # silhouette is eager, so it materializes the prediction caches;
     # past that point the assembled caches have served every consumer
-    # (iterative kmeans fit + transform) and are released here — the
+    # (kmeans fit + transform) and are released here — the
     # prediction caches are the caller's to release
     # (FlightPipelineResult.unpersist) once the result is consumed.
     sil_19 = silhouette(pred_19)

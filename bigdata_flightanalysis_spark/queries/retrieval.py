@@ -52,6 +52,7 @@ from bigdata_flightanalysis_spark.functions.text import (
     tokenize,
     word_shingles,
 )
+from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.queries.text import _SQL_TOKENS, _sql_shingles
 from bigdata_flightanalysis_spark.sources.readers import read_table
@@ -631,9 +632,7 @@ def serve_bm25_topk(
     from bigdata_flightanalysis_spark.util import path_lock
 
     with path_lock(index_path):
-        return bm25_index_topk(spark, index_path, terms, k).localCheckpoint(
-            eager=True
-        )
+        return eager_checkpoint(bm25_index_topk(spark, index_path, terms, k))
 
 
 def _with_temp_index(spark: SparkSession, prefix: str, populate) -> DataFrame:
@@ -734,7 +733,7 @@ def _refresh_text_index_locked(
         fresh = new_stats.join(seen, "doc_id", "left_anti")
     else:
         fresh = new_stats
-    fresh = fresh.localCheckpoint(eager=True)  # pin pre-append snapshot
+    fresh = eager_checkpoint(fresh)  # pin pre-append snapshot
     postings = _postings_of(
         toks.join(fresh.select("doc_id"), "doc_id", "left_semi"),
         _index_buckets(index_path),
@@ -1260,10 +1259,6 @@ def _gated_toks(docs: DataFrame) -> DataFrame:
     design."""
     toks = _toks_of(docs)
     if _frame_bytes_estimate(docs) >= MATERIALIZE_TOKS_BYTES:
-        from bigdata_flightanalysis_spark.operators.checkpointing import (
-            eager_checkpoint,
-        )
-
         toks = eager_checkpoint(toks)
     return toks
 

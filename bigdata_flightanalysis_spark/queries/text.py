@@ -33,6 +33,7 @@ from bigdata_flightanalysis_spark.functions.text import (
     word_shingles,
     stopword_hits,
 )
+from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.sources.readers import read_table
 
@@ -515,7 +516,7 @@ def doc_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unmaterialized form tokenized/hashed the new slice twice per run
     # — the advertised O(batch_text + store_join) cost, actually held
     # (r16 review).
-    batch = _band_frame(_signatures_of(docs.filter(is_new))).localCheckpoint()
+    batch = eager_checkpoint(_band_frame(_signatures_of(docs.filter(is_new))))
     probe_side = store.unionByName(batch)  # batch-vs-store AND batch-vs-batch
     a, b = batch.alias("a"), probe_side.alias("b")
     pairs = (
@@ -581,10 +582,6 @@ def _candidate_pairs(
         # ~10^-4 of corpus bytes) is materialized so both join sides
         # read it: exactly one corpus scan, plan-asserted in
         # tests/test_plans.py.
-        from bigdata_flightanalysis_spark.operators.checkpointing import (
-            eager_checkpoint,
-        )
-
         sig = eager_checkpoint(sig, checkpoint_dir)
     bands = _band_frame(sig)
     left = bands.alias("a")
@@ -701,10 +698,6 @@ def doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_flightanalysis_spark.sources.readers import table_bytes
 
     if table_bytes(sf_dir, "documents") >= MATERIALIZE_SIGNATURES_BYTES:
-        from bigdata_flightanalysis_spark.operators.checkpointing import (
-            eager_checkpoint,
-        )
-
         sig = eager_checkpoint(sig)
     band_structs = F.array(
         *[
@@ -1118,11 +1111,11 @@ def doc_dup_canonical_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pagerank,
     )
 
-    # Materialize the LSH pairs ONCE (localCheckpoint): both consumers
+    # Materialize the LSH pairs ONCE (eager checkpoint): both consumers
     # below — the PageRank edge list and the connected-components run —
     # would otherwise re-execute the whole MinHash→bands→join pipeline
     # (measured 10.9s → ~7s at sf0.1).
-    pairs = _candidate_pairs(spark, sf_dir).localCheckpoint()
+    pairs = eager_checkpoint(_candidate_pairs(spark, sf_dir))
     # similarity edges are undirected: feed both directions
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -1317,12 +1310,12 @@ def doc_minhash_estimate_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("text", "dedup", "graph"),
 )
 def doc_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Materialize the LSH pairs ONCE (localCheckpoint): the triple
+    # Materialize the LSH pairs ONCE (eager checkpoint): the triple
     # self-join plus the two degree scans and the edge count would
     # otherwise re-execute the whole MinHash→bands→join pipeline ~6×
     # — ReusedExchange does not fire across self-join scans (the
     # doc_dup_canonical_pagerank precedent, r16 review).
-    e = _candidate_pairs(spark, sf_dir).localCheckpoint()
+    e = eager_checkpoint(_candidate_pairs(spark, sf_dir))
 
     deg = (
         e.select(F.col("doc_a").alias("node"))
@@ -1351,10 +1344,6 @@ def doc_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_flightanalysis_spark.sources.readers import table_bytes
 
     if table_bytes(sf_dir, "documents") >= MATERIALIZE_SIGNATURES_BYTES:
-        from bigdata_flightanalysis_spark.operators.checkpointing import (
-            eager_checkpoint,
-        )
-
         da, db = F.col("da.d"), F.col("db.d")
         a_first = (da < db) | (
             (da == db) & (F.col("doc_a") < F.col("doc_b"))

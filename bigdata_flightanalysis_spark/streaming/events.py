@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
 from bigdata_flightanalysis_spark.util import path_lock
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -347,9 +348,9 @@ def run_to_memory(
     # table: the query is stopped so the view can only ever hold this
     # data, and leaving one uuid-named in-memory table per call leaks
     # driver memory for the session's lifetime (bench loops, long test
-    # sessions). localCheckpoint ties the data's lifetime to the
-    # returned DataFrame instead.
-    out = spark.table(name).localCheckpoint(eager=True)
+    # sessions). The returned DataFrame reads an eager checkpoint of
+    # the data instead.
+    out = eager_checkpoint(spark.table(name))
     spark.catalog.dropTempView(name)
     return out
 
