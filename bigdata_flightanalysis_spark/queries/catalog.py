@@ -50,147 +50,12 @@ def register(
     return deco
 
 
-# The external correctness harness verifies roughly the first 50 registry
-# entries per run, in iteration order.  Rounds rotate this list so every
-# query accumulates a verified run: names listed here are yielded first
-# (in list order), everything else follows in registration order.
-#
-# Round-16 rotation (scripts/stage_rotation.py computed it; validated
-# with --check after restaging). After r15, per-query newest-driver-row
-# dates: 25 at r12 (the oldest), 50 at r13, 50 at r14, 50 at r15; all
-# 175 green at their newest row. The restage is flag-free (r16 opens
-# with bookkeeping only — driver-detail snapshot, archive restore —
-# before any query-body change; any review-batch fix that touches a
-# query/oracle body will be adjudicated in stage_rotation.py's
-# STAGED_CHANGED note or restaged with --changed), so the window is
-# the one NEW query (multimodal_decode_quarantine, registered this
-# round — staging rule 1) followed by pure staleness order: (1) the
-# 25 r12-dated rows; (2) backfill with 24 of the 25 alphabetically-
-# first r13-dated rows the r15 comment staged below its cut. Window =
-# 1 + 25 + 24 = 50. The displaced 25th r13 name plus the remaining 24
-# r13 names and the 25 alphabetically-first r14 names are listed
-# below the cut and lead the r17 window; steady state holds (after
-# this window lands nothing is older than r13).
-_VERIFY_FIRST: tuple[str, ...] = (
-    # (1) the r16 window: the one NEW query this round (no driver row
-    #     yet — enters outright per staging rule 1), the 25 r12-dated
-    #     rows (oldest remaining after r15), and 24 of the 25
-    #     alphabetically-first r13-dated rows the r15 comment staged
-    #     below its cut (the displaced 25th, events_asof_purchase_click,
-    #     now leads the r17 window).
-    "multimodal_decode_quarantine",
-    "doc_winnow_fingerprints",
-    "embed_label_centroids",
-    "events_user_activity_ranked",
-    "latest_order_per_customer_status",
-    "monthly_revenue_delta",
-    "nation_counts_full_outer",
-    "order_priority_count_exists",
-    "orders_above_customer_avg",
-    "price_stddev_by_status",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q1_pricing_summary",
-    "q20_heavy_flow_suppliers",
-    "q21_sole_late_supplier",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_local_supplier_revenue",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q9_product_profit",
-    "quantity_percentiles_by_flag",
-    "rollup_revenue_region_nation",
-    "salted_user_event_counts",
-    "status_intersect_except",
-    "brand_number_histogram",
-    "corpus_card",
-    "cube_flag_status",
-    "customer_order_recency",
-    "customer_scd2_merge",
-    "doc_bpe_token_stats",
-    "doc_decontamination",
-    "doc_dup_clusters",
-    "doc_dup_graph_kcore",
-    "doc_exact_dedup",
-    "doc_fingerprints",
-    "doc_jaccard_pairs_sample",
-    "doc_langid",
-    "doc_minhash_signatures",
-    "doc_near_dup_candidates",
-    "doc_near_dup_edit_distance",
-    "doc_near_dup_incremental",
-    "doc_quality_scores",
-    "doc_simhash",
-    "embed_near_dup_incremental",
-    "embed_near_dup_pairs_largemode",
-    "embed_pq_topk",
-    "embed_quantized_topk",
-    "events_activity_incident_overlap",
-    # The 50-query window ends here (1 new + 25 r12-stale + 24
-    # r13-dated backfill). The entries below are the oldest remaining
-    # rows once this window lands — the displaced r13 name plus the
-    # remaining 24 r13 rows and the 25 alphabetically-first r14 rows
-    # lead the r17 window.
-    "events_asof_purchase_click",
-    "events_minutely_gapfill",
-    "events_range_join_error_context",
-    "events_sessionization_gaps",
-    "events_sliding_distinct_users",
-    "nation_share_of_region_revenue",
-    "order_priority_tiers",
-    "order_value_quartiles",
-    "orderdate_parts",
-    "orders_anti_bloom_check",
-    "part_affinity_topk",
-    "parts_never_ordered",
-    "q11_important_parts",
-    "q12_priority_by_flag",
-    "q14_promo_revenue",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    "q22_idle_rich_customers",
-    "q8_market_share",
-    "returnflag_in_list",
-    "revenue_by_region",
-    "segments_of_open_order_customers",
-    "supplier_running_revenue",
-    "top_customers_per_segment",
-    "union_priority_extremes",
-    "approx_distinct_users_by_type",
-    "bloom_filtered_lineitem_revenue",
-    "count_distinct_parts",
-    "customer_rfm_segments_sketch",
-    "customer_rfm_segments_twopass",
-    "customer_value_deciles",
-    "customer_value_deciles_sketch",
-    "customer_value_deciles_twopass",
-    "delayed_order_label",
-    "distinct_flag_status",
-    "doc_bm25_compact_topk",
-    "doc_bm25_index_topk",
-    "doc_bm25_refresh_topk",
-    "doc_bm25_serve_topk",
-    "doc_boilerplate_density",
-    "doc_chunk_windows",
-    "doc_dedup_keep_best",
-    "doc_length_histogram",
-    "doc_minhash_estimate_vs_exact",
-    "doc_ngram_topk",
-    "doc_pack_sequences",
-    "doc_simhash_near_dup",
-    "doc_token_stats",
-    "embed_cosine_topk",
-)
-
-
 def load_all() -> dict[str, EngineQuery]:
-    """Import every query module (side effect: registration).
+    """Import every query module (side effect: registration) and
+    return the registry in registration order.
 
-    Returns the registry reordered so queries still needing an external
-    verification row are iterated first (see ``_VERIFY_FIRST``).
+    Reads no files: the driver's verification order is derived in
+    ``__spark_entry__``.
     """
     import bigdata_flightanalysis_spark.queries.bloom  # noqa: F401
     import bigdata_flightanalysis_spark.queries.events  # noqa: F401
@@ -205,26 +70,4 @@ def load_all() -> dict[str, EngineQuery]:
     import bigdata_flightanalysis_spark.queries.text_ext  # noqa: F401
     import bigdata_flightanalysis_spark.queries.tpch_shapes  # noqa: F401
 
-    # Fail fast on rotation typos: a _VERIFY_FIRST name missing from the
-    # registry would otherwise silently drop out of the verification
-    # window (exactly how four promised queries and four misspelled
-    # backfill names went unchecked in round 4).
-    missing = set(_VERIFY_FIRST) - REGISTRY.keys()
-    if missing:
-        # An explicit raise, not assert: assert is stripped under
-        # ``python -O``, which would re-enable the silent-drop failure
-        # mode this check exists to prevent.
-        raise RuntimeError(
-            f"_VERIFY_FIRST names not in registry: {sorted(missing)}"
-        )
-    if len(set(_VERIFY_FIRST)) != len(_VERIFY_FIRST):
-        # A duplicate collapses in the ordered dict below, silently
-        # shifting every later entry up one slot — an unstaged query
-        # slides into the externally-verified window and a staged one
-        # falls out, with no error anywhere.
-        seen: set[str] = set()
-        dups = [n for n in _VERIFY_FIRST if n in seen or seen.add(n)]
-        raise RuntimeError(f"_VERIFY_FIRST has duplicates: {sorted(set(dups))}")
-    ordered = {n: REGISTRY[n] for n in _VERIFY_FIRST}
-    ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
-    return ordered
+    return REGISTRY

@@ -1,13 +1,12 @@
 """Fresh-clone smoke: prove the COMMITTED tree works from a bare clone.
 
 Round-end hygiene (run manually in r13, codified here): a `git clone` of
-HEAD — no working-tree files, no caches — must (1) pass the rotation
-staging check, (2) pass the fast non-Spark tooling tests, and (3) run the
-flagship `entry()` under a VANILLA SparkSession (plain builder, none of
-the repo's session tuning), returning a non-empty result. Catches
-"works-on-my-tree" drift: files that were never `git add`ed, hidden
-dependence on untracked state, or session configs the entry contract
-doesn't own.
+HEAD — no working-tree files, no caches — must (1) pass the fast
+non-Spark tooling tests and (2) run the flagship `entry()` under a
+VANILLA SparkSession (plain builder, none of the repo's session tuning),
+returning a non-empty result. Catches "works-on-my-tree" drift: files
+that were never `git add`ed, hidden dependence on untracked state, or
+session configs the entry contract doesn't own.
 
 Usage:  python scripts/fresh_clone_smoke.py
 Exits 0 and prints `fresh-clone smoke: all green` on success; exits 1 on
@@ -26,7 +25,7 @@ import tempfile
 # Fast files only, and none of them opens a SparkSession — the point is
 # tooling sanity in seconds, not a second full suite (partest covers that).
 TOOLING_TESTS = [
-    "tests/test_stage_rotation.py",
+    "tests/test_verification_order.py",
     "tests/test_partest.py",
     "tests/test_bench_tools.py",
     "tests/test_fsck_properties.py",
@@ -67,28 +66,15 @@ print(f"entry(): {n} rows x {cols} cols")
 """
 
 
-def _run(step: str, cmd: list[str], cwd: str, ok_if=None) -> None:
+def _run(step: str, cmd: list[str], cwd: str) -> None:
     proc = subprocess.run(cmd, cwd=cwd, capture_output=True, text=True)
-    passed = proc.returncode == 0 or (
-        ok_if is not None and ok_if(proc.returncode, proc.stdout)
-    )
-    if not passed:
+    if proc.returncode != 0:
         print(f"FAIL [{step}]: {' '.join(cmd)}", file=sys.stderr)
         sys.stderr.write(proc.stdout[-4000:])
         sys.stderr.write(proc.stderr[-4000:])
         sys.exit(1)
     tail = proc.stdout.strip().splitlines()
     print(f"ok   [{step}]" + (f": {tail[-1]}" if tail else ""))
-
-
-def _stale_is_healthy(rc: int, out: str) -> bool:
-    """Round-end state: the staged round's CORRECTNESS file has landed
-    but the next restage hasn't happened yet. stage_rotation --check
-    exits 3 (a machine contract, r16 review — the old prose-substring
-    sniffing broke on any message rewording) with a STALE diagnosis
-    there — a healthy committed tree at exactly the smoke's intended
-    usage time. WRONG staging exits 4 and fails the smoke."""
-    return rc == 3
 
 
 def main() -> None:
@@ -103,12 +89,6 @@ def main() -> None:
     clone = os.path.join(tmp, "clone")
     try:
         _run("clone", ["git", "clone", "--quiet", repo, clone], cwd=tmp)
-        _run(
-            "rotation --check",
-            [sys.executable, "scripts/stage_rotation.py", "--check"],
-            cwd=clone,
-            ok_if=_stale_is_healthy,
-        )
         _run(
             "tooling tests",
             [sys.executable, "-m", "pytest", "-q", *TOOLING_TESTS],

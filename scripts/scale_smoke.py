@@ -115,6 +115,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
 from bigdata_flightanalysis_spark.operators.graph import connected_components
 from bigdata_flightanalysis_spark.queries.text import (
     _band_frame,
@@ -599,7 +600,7 @@ def _smoke_streaming(spark, args, out: dict) -> None:
         # pin the batch once: foreachBatch frames re-execute the source
         # per action, so a bare pre-count would double the driver-side
         # generation this smoke is bounded by (halving rows_per_s)
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = eager_checkpoint(batch_df)
         n = batch_df.count()
         if n == 0:
             return
@@ -736,13 +737,13 @@ def main() -> None:
     t0 = time.perf_counter()
     # Large-corpus posture: materialize signatures once (the >=1 GiB
     # switch _candidate_pairs would take on a real corpus this size).
-    sig = _signatures_of(docs).localCheckpoint(eager=True)
+    sig = eager_checkpoint(_signatures_of(docs))
     out["t_signatures_s"] = round(time.perf_counter() - t0, 2)
 
     t0 = time.perf_counter()
     bands = _band_frame(sig)
     a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
+    pairs = eager_checkpoint(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -753,7 +754,6 @@ def main() -> None:
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     out["n_pairs"] = pairs.count()
     out["t_pairs_s"] = round(time.perf_counter() - t0, 2)

@@ -30,73 +30,3 @@ def test_every_registry_query_runs_at_smoke_sf(spark):
         assert df.columns, name
         df.limit(5).collect()  # forces execution of the whole plan
 
-
-def test_rotation_staging_is_valid():
-    """The verification-window staging must fail fast on BOTH silent
-    failure modes: names missing from the registry (round-4 incident)
-    and duplicated names (a duplicate collapses in the reorder dict,
-    silently shifting an unstaged query into the externally-verified
-    window). load_all() itself raises on either; this pins the
-    contract plus the window arithmetic."""
-    from bigdata_flightanalysis_spark.queries import catalog
-
-    names = list(catalog.load_all())  # raises on missing/duplicate
-    vf = catalog._VERIFY_FIRST
-    assert len(set(vf)) == len(vf)
-    assert len(vf) >= 50, "staging must cover the driver's ~50-row window"
-    assert names[: len(vf)] == list(vf)
-
-
-def test_rotation_window_contains_every_stalest_query():
-    """Freshness invariant behind the rotation (scripts/stage_rotation.py
-    automates the staging; this guards hand edits against drift): the
-    driver verifies the first ~50 registry entries, so every query
-    whose newest driver row is the OLDEST on record must be inside
-    that window — otherwise its staleness grows unboundedly.
-
-    The repo alternates between two legitimate states at a round
-    boundary (r9 verdict defect #1 — this test used to fail
-    deterministically in the second one):
-
-    - STAGED: the window was restaged for the NEXT driver run, so the
-      stalest queries sit inside it (the builder's mid-round state);
-    - JUST-VERIFIED: the driver's newest CORRECTNESS file has landed
-      and its name set covers the still-staged window — every window
-      row was verified moments ago, and the stalest set is now the
-      below-the-cut staging that the next restage will promote.
-
-    Either state satisfies the freshness contract; only a window that
-    is NEITHER staged-for-next NOR just-verified is drift."""
-    import glob
-    import json
-    import re
-
-    from bigdata_flightanalysis_spark.queries import catalog
-
-    newest: dict[str, int] = {}
-    newest_round = 0
-    newest_file_names: set[str] = set()
-    for f in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", f).group(1))
-        names_in_file = set(json.load(open(f, encoding="utf-8")))
-        for name in names_in_file:
-            newest[name] = max(newest.get(name, 0), rnd)
-        if rnd >= newest_round:
-            newest_round = rnd
-            newest_file_names = names_in_file
-    if not newest:  # fresh clone without driver artifacts: nothing to pin
-        return
-    names = list(catalog.load_all())
-    window = set(names[:50])
-    if window <= newest_file_names:
-        return  # JUST-VERIFIED: the staged window is the set the driver
-        # verified in the newest round; restaging is due but freshness holds.
-    registry_aged = {q: r for q, r in newest.items() if q in set(names)}
-    oldest = min(registry_aged.values())
-    stalest = {q for q, r in registry_aged.items() if r == oldest}
-    left_out = sorted(stalest - window)
-    assert not left_out, (
-        f"queries with the oldest driver row (r{oldest}) missing from "
-        f"the 50-row verification window, and the window is not the "
-        f"just-verified r{newest_round} set either: {left_out}"
-    )

@@ -1,9 +1,10 @@
 """One materialization path.
 
-Every checkpoint in the engine goes through ``operators.checkpointing``,
-so ``SPARK_GRAFT_CHECKPOINT_DIR`` (or an explicit ``checkpoint_dir``)
-selects reliable checkpoints everywhere. A bare ``localCheckpoint`` call
-elsewhere would silently keep executor-local blocks on a cluster.
+Every checkpoint in the engine and its ``scripts/`` goes through
+``operators.checkpointing``, so ``SPARK_GRAFT_CHECKPOINT_DIR`` (or an
+explicit ``checkpoint_dir``) selects reliable checkpoints everywhere. A
+bare ``localCheckpoint`` call elsewhere would silently keep
+executor-local blocks on a cluster.
 """
 
 from __future__ import annotations
@@ -15,25 +16,28 @@ import bigdata_flightanalysis_spark as pkg
 from bigdata_flightanalysis_spark.queries.catalog import load_all
 
 PKG_DIR = os.path.dirname(pkg.__file__)
+REPO = os.path.dirname(PKG_DIR)
+SCANNED = (PKG_DIR, os.path.join(REPO, "scripts"))
 ALLOWED = os.path.join(PKG_DIR, "operators", "checkpointing.py")
 
 
 def _bare_local_checkpoints() -> list[str]:
     found = []
-    for root, _dirs, files in os.walk(PKG_DIR):
-        for name in files:
-            path = os.path.join(root, name)
-            if not name.endswith(".py") or path == ALLOWED:
-                continue
-            with open(path, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read(), path)
-            found += [
-                f"{os.path.relpath(path, PKG_DIR)}:{node.lineno}"
-                for node in ast.walk(tree)
-                if isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "localCheckpoint"
-            ]
+    for top in SCANNED:
+        for root, _dirs, files in os.walk(top):
+            for name in files:
+                path = os.path.join(root, name)
+                if not name.endswith(".py") or path == ALLOWED:
+                    continue
+                with open(path, encoding="utf-8") as fh:
+                    tree = ast.parse(fh.read(), path)
+                found += [
+                    f"{os.path.relpath(path, REPO)}:{node.lineno}"
+                    for node in ast.walk(tree)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ]
     return found
 
 
