@@ -208,6 +208,26 @@ def static_partitioning_scope(
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
+#: The one scale-posture knee. At or above this Catalyst-estimated
+#: input size, the five large-input plan switches take their cluster
+#: shape: MinHash and SimHash signatures checkpointed before the
+#: banded self-join, degree-oriented triangle edges, blocked embedding
+#: pairs, and BM25 build/refresh tokens checkpointed once. Below it the
+#: recompute shapes win; materializing cost 3x at sf0.1 for the MinHash
+#: signatures. Tests patch this constant to force the large shape.
+LARGE_INPUT_BYTES = 1 << 30
+
+
+def is_large_input(df: DataFrame) -> bool:
+    """Whether ``df`` is large enough for the cluster plan shape,
+    judged by Catalyst's size estimate of its optimized plan. For a
+    parquet scan that is the files' total size on any Hadoop
+    filesystem; filters keep the full estimate, which errs toward
+    the large shape."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) >= LARGE_INPUT_BYTES
+
+
 #: Target bytes per partition for size-derived loop widths (the same
 #: order as AQE's advisoryPartitionSizeInBytes default, which cannot
 #: steer these plans because the scope above compiles them AQE-free).

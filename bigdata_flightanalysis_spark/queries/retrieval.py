@@ -52,7 +52,10 @@ from bigdata_flightanalysis_spark.functions.text import (
     tokenize,
     word_shingles,
 )
-from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
+from bigdata_flightanalysis_spark.operators.checkpointing import (
+    eager_checkpoint,
+    is_large_input,
+)
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.queries.text import _SQL_TOKENS, _sql_shingles
 from bigdata_flightanalysis_spark.sources.readers import read_table
@@ -1189,11 +1192,11 @@ def _build_text_index_from_locked(
         _remove_any(f"{index_path}/{rel}.new")
         _remove_any(f"{index_path}/{rel}.staging")
     _record_index_buckets(index_path)
-    # _gated_toks: above MATERIALIZE_TOKS_BYTES the corpus is
+    # _gated_toks: above LARGE_INPUT_BYTES the corpus is
     # scanned+tokenized ONCE (checkpointed token table feeds both the
     # doc_stats and postings writes) — with the totals already derived
     # from the written doc_stats below, a large build drops from 2
-    # corpus tokenizations to 1 (r16 optimization, guide §2.4).
+    # corpus tokenizations to 1 (guide §2.4).
     toks = _gated_toks(docs)
     toks.select("doc_id", "dl").write.mode("overwrite").parquet(
         f"{index_path}/doc_stats"
@@ -1229,36 +1232,16 @@ def _toks_of(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Above this Catalyst-estimated input size, build and refresh
-#: materialize the tokenized form ONCE (eager checkpoint) instead of
-#: running the regex tokenization twice — once for the doc_stats leg,
-#: once for the postings leg. Same knee as queries.text's
-#: MATERIALIZE_SIGNATURES_BYTES: below it the recompute plan wins (a
-#: second cheap tokenize pass beats materializing token arrays), above
-#: it the scan+tokenize dominates and paying one input-sized
-#: checkpoint write to halve it wins (guide §2.4/§5 — remove passes;
-#: cache only when recompute costs more than the storage pressure).
-MATERIALIZE_TOKS_BYTES = 1 << 30
-
-
-def _frame_bytes_estimate(df: DataFrame) -> int:
-    """Catalyst's size estimate for an arbitrary frame — the input to
-    the tokenization materialization gate. For parquet-scan-rooted
-    frames this is the on-disk footprint (filters keep the conservative
-    full estimate, which errs toward materializing — the safe
-    direction); on a real deployment the catalog statistic feeds the
-    same switch."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
 def _gated_toks(docs: DataFrame) -> DataFrame:
-    """The build/refresh input's tokenized form, materialized above the
-    size gate so a large input is scanned+tokenized exactly once (the
-    doc_stats and postings legs both read the checkpoint); below it the
-    measured-faster recompute shape is kept — bench SFs unchanged by
-    design."""
+    """The build/refresh input's tokenized form. For a large input
+    (``is_large_input``) it is checkpointed once instead of running the
+    regex tokenization twice, once for the doc_stats leg and once for
+    the postings leg: there the scan+tokenize dominates, and one
+    input-sized checkpoint write halves it (guide §2.4/§5 — remove
+    passes). Below the gate a second cheap tokenize pass beats
+    materializing token arrays, so the recompute shape is kept."""
     toks = _toks_of(docs)
-    if _frame_bytes_estimate(docs) >= MATERIALIZE_TOKS_BYTES:
+    if is_large_input(docs):
         toks = eager_checkpoint(toks)
     return toks
 

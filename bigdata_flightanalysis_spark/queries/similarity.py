@@ -20,6 +20,7 @@ from bigdata_flightanalysis_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
+from bigdata_flightanalysis_spark.operators.checkpointing import is_large_input
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.sources.readers import read_table
 
@@ -290,11 +291,6 @@ def embed_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NEAR_DUP_PLANES = 4
 NEAR_DUP_TAU = 0.35
-# Above this embeddings-table size the pair self-join switches to
-# triangular blocking (8 blocks): with only 2^NEAR_DUP_PLANES buckets a
-# dense corpus makes every bucket hot, and an unblocked join puts each
-# bucket's quadratic pair block in a single reducer.
-PAIR_BLOCKING_BYTES = 1 << 30
 
 
 _SQL_EMBED_NEAR_DUP_ORACLE = f"""
@@ -318,7 +314,7 @@ _SQL_EMBED_NEAR_DUP_ORACLE = f"""
     f"{NEAR_DUP_PLANES}-plane sign-LSH bucket equi-join prunes the "
     f"quadratic pair space, exact cosine ≥ {NEAR_DUP_TAU} confirms. On "
     "a near-dup-dense corpus a hot bucket's pair block is quadratic in "
-    "ONE reducer, so above PAIR_BLOCKING_BYTES the self-join runs "
+    "ONE reducer, so above LARGE_INPUT_BYTES the self-join runs "
     "through operators.skew.blocked_self_pairs (triangular blocking: "
     "the hot bucket's pairs spread over S(S+1)/2 reducers) — identical "
     "pair set, asserted in tests/test_skew.py.",
@@ -344,11 +340,12 @@ def embed_near_dup_pairs(
     plane subsets."""
     from bigdata_flightanalysis_spark.operators.skew import blocked_self_pairs
 
-    if n_blocks is None:
-        from bigdata_flightanalysis_spark.sources.readers import table_bytes
-
-        n_blocks = 8 if table_bytes(sf_dir, "embeddings") >= PAIR_BLOCKING_BYTES else 1
     emb = read_table(spark, sf_dir, "embeddings")
+    if n_blocks is None:
+        # With only 2^n_planes buckets a large dense corpus makes every
+        # bucket hot, and an unblocked join puts each bucket's
+        # quadratic pair block in a single reducer: block 8 ways.
+        n_blocks = 8 if is_large_input(emb) else 1
     pre = _prepared(
         emb,
         _spark_bucket(F.col("embedding"), n_planes).alias("bucket"),
@@ -372,7 +369,7 @@ def embed_near_dup_pairs(
     "(n_blocks=8): the LSH-bucket self-join runs through triangular "
     "pair blocking so a hot bucket's quadratic pair block spreads over "
     "S(S+1)/2 reducers — the shape the pipeline switches to above "
-    "PAIR_BLOCKING_BYTES. Same oracle, same rows; registered so the "
+    "LARGE_INPUT_BYTES. Same oracle, same rows; registered so the "
     "correctness harness exercises the blocked physical plan the "
     "100 TB path actually runs.",
     tags=("similarity", "dedup", "lsh", "skew", "largemode"),

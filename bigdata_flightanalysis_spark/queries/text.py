@@ -33,7 +33,10 @@ from bigdata_flightanalysis_spark.functions.text import (
     word_shingles,
     stopword_hits,
 )
-from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
+from bigdata_flightanalysis_spark.operators.checkpointing import (
+    eager_checkpoint,
+    is_large_input,
+)
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.sources.readers import read_table
 
@@ -460,7 +463,7 @@ def doc_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "signatures eagerly checkpointed so the corpus parquet is scanned "
     "exactly once and both self-join sides read the materialized "
     "signature table — the shape the pipeline switches to above "
-    "MATERIALIZE_SIGNATURES_BYTES (1 GiB). Same oracle, same rows; "
+    "LARGE_INPUT_BYTES (1 GiB). Same oracle, same rows; "
     "registered separately so the correctness harness exercises the "
     "checkpointed physical plan the 100 TB path actually runs, not "
     "just the small-corpus recompute plan.",
@@ -535,14 +538,6 @@ def doc_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy("doc_a", "doc_b")
 
 
-# Above this corpus size the signature table is materialized before the
-# banded self-join so the raw corpus is scanned ONCE; below it the
-# recompute-both-sides form wins (measured 3x at sf0.1 — cache
-# materialization costs more than a second cheap md5 pass over a corpus
-# this small).
-MATERIALIZE_SIGNATURES_BYTES = 1 << 30  # 1 GiB of documents parquet
-
-
 def _candidate_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -562,16 +557,15 @@ def _candidate_pairs(
     # cache materialization (3× slower at sf0.1) and (c) materializes
     # quadratic pair arrays in single tasks on hot buckets (this corpus
     # is near-dup-dense). At cluster scale the corpus scan DOMINATES
-    # and recompute-both-sides doubles the dominant cost, so above
-    # MATERIALIZE_SIGNATURES_BYTES the signature table (one narrow row
-    # per doc — ~10^-4 of corpus bytes) is eagerly checkpointed and
-    # both join sides read the checkpoint: exactly one corpus scan,
-    # plan-asserted in tests/test_plans.py.
+    # and recompute-both-sides doubles the dominant cost, so for a
+    # large input (is_large_input: at or above LARGE_INPUT_BYTES) the
+    # signature table (one narrow row per doc — ~10^-4 of corpus bytes)
+    # is eagerly checkpointed and both join sides read the checkpoint:
+    # exactly one corpus scan, plan-asserted in tests/test_plans.py.
+    docs = read_table(spark, sf_dir, "documents")
     if materialize is None:
-        from bigdata_flightanalysis_spark.sources.readers import table_bytes
-
-        materialize = table_bytes(sf_dir, "documents") >= MATERIALIZE_SIGNATURES_BYTES
-    sig = _signatures(spark, sf_dir)
+        materialize = is_large_input(docs)
+    sig = _signatures_of(docs)
     if materialize:
         # Reliable checkpoint when a dir is configured (checkpoint_dir
         # argument or the SPARK_GRAFT_CHECKPOINT_DIR env contract),
@@ -633,8 +627,7 @@ _SQL_SIMHASH = f"""
 """
 
 
-def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
+def _simhash_of(docs: DataFrame) -> DataFrame:
     hashed = docs.select(
         "doc_id", F.explode(tokenize("text")).alias("t")
     ).select("doc_id", md5_long(F.col("t")).alias("h"))
@@ -662,7 +655,7 @@ def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup", "simhash"),
 )
 def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _simhash_frame(spark, sf_dir).orderBy("doc_id")
+    return _simhash_of(read_table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 @register(
@@ -686,18 +679,17 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same banded self-join shape as doc_near_dup_candidates (see the
     # shape comparison there), exact hamming re-check after the join.
-    sig = _simhash_frame(spark, sf_dir)
-    # Same size switch as _candidate_pairs (r16 optimization): below
-    # MATERIALIZE_SIGNATURES_BYTES the recompute-both-sides plan wins
-    # (the fingerprint is one cheap md5+vote pass; materialization
-    # costs more at test SFs — measured for the MinHash twin); above
-    # it the corpus scan dominates and recomputing the explode+vote
-    # aggregate for BOTH self-join sides doubles the dominant cost, so
-    # the (doc_id, simhash) table — two longs per doc — is
-    # checkpointed and both sides read it: exactly one corpus scan.
-    from bigdata_flightanalysis_spark.sources.readers import table_bytes
-
-    if table_bytes(sf_dir, "documents") >= MATERIALIZE_SIGNATURES_BYTES:
+    docs = read_table(spark, sf_dir, "documents")
+    sig = _simhash_of(docs)
+    # Same size switch as _candidate_pairs: below LARGE_INPUT_BYTES the
+    # recompute-both-sides plan wins (the fingerprint is one cheap
+    # md5+vote pass; materialization costs more at test SFs — measured
+    # for the MinHash twin); above it the corpus scan dominates and
+    # recomputing the explode+vote aggregate for BOTH self-join sides
+    # doubles the dominant cost, so the (doc_id, simhash) table — two
+    # longs per doc — is checkpointed and both sides read it: exactly
+    # one corpus scan.
+    if is_large_input(docs):
         sig = eager_checkpoint(sig)
     band_structs = F.array(
         *[
@@ -1299,8 +1291,9 @@ def doc_minhash_estimate_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     "clusters are clique-like (true near-dup sets), a low one flags "
     "chained false-positive merges — the graph-health metric for "
     "dedup QA. Scale shape: two hash-partitioned edge joins (the "
-    "standard distributed triangle enumeration); above the corpus-size "
-    "gate the edges are re-oriented DEGREE-ORDERED (every edge points "
+    "standard distributed triangle enumeration); above "
+    "LARGE_INPUT_BYTES of documents the edges are re-oriented "
+    "DEGREE-ORDERED (every edge points "
     "low-degree→high-degree, so wedge fan-out is bounded by min-degree "
     "and a celebrity node cannot pin its whole neighborhood on one "
     "build side — provably count-identical to the a<b orientation the "
@@ -1323,9 +1316,9 @@ def doc_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    # Degree-ordered orientation (r17, §2.5 skew), gated on corpus size
-    # like the MinHash/SimHash materialization switch: above
-    # MATERIALIZE_SIGNATURES_BYTES every edge is re-oriented
+    # Degree-ordered orientation (§2.5 skew), gated on corpus size like
+    # the MinHash/SimHash materialization switch: above
+    # LARGE_INPUT_BYTES every edge is re-oriented
     # low-degree→high-degree (ties by doc_id) so the wedge self-join
     # enumerates out-neighbor PAIRS only at each triangle's LOWEST-rank
     # vertex — per-node join fan-out is then bounded by min-degree
@@ -1340,10 +1333,9 @@ def doc_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs two degree joins plus one more materialization job, which
     # at bench SFs is pure overhead (measured +0.5 s / +4 jobs at
     # sf0.1) on a graph whose max degree is tiny — the same
-    # measured-faster-small-mode reasoning as the signature gate.
-    from bigdata_flightanalysis_spark.sources.readers import table_bytes
-
-    if table_bytes(sf_dir, "documents") >= MATERIALIZE_SIGNATURES_BYTES:
+    # measured-faster-small-mode reasoning as the signature gate. The
+    # pairs above hide the corpus scan, so the gate reads it lazily.
+    if is_large_input(read_table(spark, sf_dir, "documents")):
         da, db = F.col("da.d"), F.col("db.d")
         a_first = (da < db) | (
             (da == db) & (F.col("doc_a") < F.col("doc_b"))

@@ -122,38 +122,6 @@ def read_parquet_nanos_gated(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
 
 
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk parquet footprint of one testdata table — the input to
-    the size switches that pick a plan shape (signature
-    materialization, pair-join blocking). Cheap local metadata; on a
-    real deployment this is the catalog/table statistic."""
-    import os
-
-    if name not in TABLE_NAMES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    path = f"{sf_dir}/{name}.parquet"
-    if not os.path.exists(path):
-        # os.walk of a missing dir yields nothing — returning 0 would
-        # silently steer every size-based plan switch to the
-        # small-data shape on a typo'd sf_dir
-        raise FileNotFoundError(f"no such table file/dir: {path}")
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-    if total == 0:
-        # an existing-but-empty dir (half-written or cleaned dataset)
-        # is the same size-switch hazard as a missing path: 0 bytes
-        # silently steers every size-based plan to the small-data shape
-        raise FileNotFoundError(f"table dir has no data files: {path}")
-    return total
-
-
 def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """All ten testdata tables as a dict (lazy scans; only the three
     timestamp tables run a footer-inference job)."""

@@ -735,8 +735,9 @@ def main() -> None:
     out: dict = {"rows": args.rows, "partitions": args.partitions}
 
     t0 = time.perf_counter()
-    # Large-corpus posture: materialize signatures once (the >=1 GiB
-    # switch _candidate_pairs would take on a real corpus this size).
+    # Large-corpus posture: materialize signatures once (the switch
+    # _candidate_pairs takes when checkpointing.is_large_input holds,
+    # at LARGE_INPUT_BYTES of corpus).
     sig = eager_checkpoint(_signatures_of(docs))
     out["t_signatures_s"] = round(time.perf_counter() - t0, 2)
 

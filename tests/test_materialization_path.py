@@ -1,10 +1,14 @@
-"""One materialization path.
+"""One materialization path and one large-input gate.
 
 Every checkpoint in the engine and its ``scripts/`` goes through
 ``operators.checkpointing``, so ``SPARK_GRAFT_CHECKPOINT_DIR`` (or an
 explicit ``checkpoint_dir``) selects reliable checkpoints everywhere. A
 bare ``localCheckpoint`` call elsewhere would silently keep
 executor-local blocks on a cluster.
+
+Every size-driven plan switch asks ``checkpointing.is_large_input``. A
+``sizeInBytes`` read or a ``table_bytes`` estimator elsewhere would grow
+a second knee beside ``LARGE_INPUT_BYTES``.
 """
 
 from __future__ import annotations
@@ -21,7 +25,25 @@ SCANNED = (PKG_DIR, os.path.join(REPO, "scripts"))
 ALLOWED = os.path.join(PKG_DIR, "operators", "checkpointing.py")
 
 
-def _bare_local_checkpoints() -> list[str]:
+def _is_bare_local_checkpoint(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    )
+
+
+def _is_size_estimator(node: ast.AST) -> bool:
+    if isinstance(node, ast.Attribute) and node.attr == "sizeInBytes":
+        return True
+    # a name, attribute, import or def called table_bytes
+    for field in ("id", "attr", "name"):
+        if getattr(node, field, None) == "table_bytes":
+            return True
+    return False
+
+
+def _outside_checkpointing(is_hit) -> list[str]:
     found = []
     for top in SCANNED:
         for root, _dirs, files in os.walk(top):
@@ -34,15 +56,17 @@ def _bare_local_checkpoints() -> list[str]:
                 found += [
                     f"{os.path.relpath(path, REPO)}:{node.lineno}"
                     for node in ast.walk(tree)
-                    if isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "localCheckpoint"
+                    if is_hit(node)
                 ]
     return found
 
 
 def test_no_bare_local_checkpoint_outside_checkpointing_module():
-    assert _bare_local_checkpoints() == []
+    assert _outside_checkpointing(_is_bare_local_checkpoint) == []
+
+
+def test_no_size_estimator_outside_checkpointing_module():
+    assert _outside_checkpointing(_is_size_estimator) == []
 
 
 def test_rerouted_query_checkpoints_into_env_dir(

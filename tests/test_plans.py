@@ -159,17 +159,18 @@ def test_near_dup_reliable_checkpoint_mode(spark, tmp_path):
 def test_simhash_near_dup_materialized_mode_scans_corpus_once(
     spark, registry, monkeypatch
 ):
-    """doc_simhash_near_dup's large-corpus switch (r16 optimization —
-    same MATERIALIZE_SIGNATURES_BYTES gate as the MinHash path): above
+    """doc_simhash_near_dup's large-corpus switch (the same
+    is_large_input gate as the MinHash path): above
     the threshold the (doc_id, simhash) table is eagerly checkpointed
     so the banded self-join reads it on both sides and the corpus is
     scanned once; results identical to the small-mode recompute plan."""
+    from bigdata_flightanalysis_spark.operators import checkpointing
     from bigdata_flightanalysis_spark.queries import text as text_mod
 
     small = text_mod.doc_simhash_near_dup(spark, SF)
     assert _plan(small).count("Scan parquet") == 2  # one per join side
 
-    monkeypatch.setattr(text_mod, "MATERIALIZE_SIGNATURES_BYTES", 0)
+    monkeypatch.setattr(checkpointing, "LARGE_INPUT_BYTES", 0)
     large = text_mod.doc_simhash_near_dup(spark, SF)
     assert _plan(large).count("Scan parquet") == 0  # checkpoint-fed
     assert sorted(map(tuple, large.collect())) == sorted(
@@ -180,25 +181,50 @@ def test_simhash_near_dup_materialized_mode_scans_corpus_once(
 def test_triangles_degree_oriented_mode_matches_small_mode(
     spark, registry, monkeypatch
 ):
-    """doc_dup_graph_triangles' large-corpus switch (r17, §2.5 skew —
-    same MATERIALIZE_SIGNATURES_BYTES gate as the MinHash/SimHash
-    paths): above the threshold edges are re-oriented
-    low-degree→high-degree so wedge fan-out is bounded by min-degree
-    (a celebrity doc can't pin its whole neighborhood on one build
-    side); the triangle/wedge counts are provably identical to the
-    small-mode a<b orientation, asserted row-for-row here."""
+    """doc_dup_graph_triangles' large-corpus switch (§2.5 skew — the
+    same is_large_input gate as the MinHash/SimHash paths): above the
+    threshold edges are re-oriented low-degree→high-degree so wedge
+    fan-out is bounded by min-degree (a celebrity doc can't pin its
+    whole neighborhood on one build side); the triangle/wedge counts
+    are provably identical to the small-mode a<b orientation, asserted
+    row-for-row here."""
+    from bigdata_flightanalysis_spark.operators import checkpointing
     from bigdata_flightanalysis_spark.queries import text as text_mod
 
     small = text_mod.doc_dup_graph_triangles(spark, SF)
     # small mode keeps the plain a<b wedge join: no degree-rank column
     assert "dd#" not in _plan(small)
 
-    monkeypatch.setattr(text_mod, "MATERIALIZE_SIGNATURES_BYTES", 0)
+    monkeypatch.setattr(checkpointing, "LARGE_INPUT_BYTES", 0)
     large = text_mod.doc_dup_graph_triangles(spark, SF)
     # the wedge join now orders by the dst endpoint's (degree, id) rank
     assert "dd#" in _plan(large)
     assert [tuple(r) for r in large.collect()] == [
         tuple(r) for r in small.collect()
+    ]
+
+
+def test_embed_pair_blocking_gate_matches_largemode(spark, registry, monkeypatch):
+    """embed_near_dup_pairs' large-corpus switch (the same
+    is_large_input gate as the MinHash path): above the threshold the
+    bucket self-join runs blocked, with the same plan shape and rows
+    as the forced embed_near_dup_pairs_largemode twin."""
+    import re
+
+    from bigdata_flightanalysis_spark.operators import checkpointing
+
+    def shape(df):  # plan text without per-build ids
+        return re.sub(r"#\d+|plan_id=\d+|(?<=lambda \w)_\d+", "", _plan(df))
+
+    forced = registry["embed_near_dup_pairs_largemode"].fn(spark, SF)
+    small = registry["embed_near_dup_pairs"].fn(spark, SF)
+    assert shape(small) != shape(forced)
+
+    monkeypatch.setattr(checkpointing, "LARGE_INPUT_BYTES", 0)
+    gated = registry["embed_near_dup_pairs"].fn(spark, SF)
+    assert shape(gated) == shape(forced)
+    assert [tuple(r) for r in gated.collect()] == [
+        tuple(r) for r in forced.collect()
     ]
 
 

@@ -231,12 +231,13 @@ def test_bm25_index_refresh_converges_to_full_build(spark, tmp_path):
 def test_refresh_materialized_toks_tokenizes_batch_once(
     spark, tmp_path, monkeypatch
 ):
-    """Large-input mode of build/refresh (r16 optimization — same size
-    gate family as text.MATERIALIZE_SIGNATURES_BYTES): above the gate
+    """Large-input mode of build/refresh (the same is_large_input gate
+    as the MinHash signatures): above the gate
     the input's tokenized form is eagerly checkpointed so the
     doc_stats leg and the postings leg both read the checkpoint and
     the input is scanned+tokenized exactly once; the served index must
     be bit-identical to the default recompute shape's."""
+    from bigdata_flightanalysis_spark.operators import checkpointing
     from bigdata_flightanalysis_spark.queries import retrieval as r
     from bigdata_flightanalysis_spark.sources.readers import read_table
 
@@ -247,7 +248,7 @@ def test_refresh_materialized_toks_tokenizes_batch_once(
     # parquet; above it (gate forced to 0) it reads the checkpoint
     plan_small = r._gated_toks(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" in plan_small
-    monkeypatch.setattr(r, "MATERIALIZE_TOKS_BYTES", 0)
+    monkeypatch.setattr(checkpointing, "LARGE_INPUT_BYTES", 0)
     plan_large = r._gated_toks(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" not in plan_large  # checkpoint-fed
 
@@ -257,7 +258,7 @@ def test_refresh_materialized_toks_tokenizes_batch_once(
     r.refresh_text_index(spark, docs.where(F.col("doc_id") >= n // 3), gated)
     served_gated = [tuple(x) for x in r.bm25_index_topk(spark, gated).collect()]
 
-    monkeypatch.setattr(r, "MATERIALIZE_TOKS_BYTES", 1 << 30)
+    monkeypatch.undo()
     plain = str(tmp_path / "plain")
     r.build_text_index_from(spark, docs.where(F.col("doc_id") < n // 2), plain)
     r.refresh_text_index(spark, docs.where(F.col("doc_id") >= n // 3), plain)

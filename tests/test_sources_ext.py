@@ -213,21 +213,6 @@ def test_events_read_does_not_leak_legacy_parquet_conf(spark, sf_dir):
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
 
 
-def test_table_bytes_rejects_unknown_table_and_missing_dir(sf_dir, tmp_path):
-    """table_bytes feeds size-based plan switches — a typo'd name or
-    sf_dir must raise, not silently return 0 and steer every switch
-    to the small-data plan shape (r14 review)."""
-    import pytest
-
-    from bigdata_flightanalysis_spark.sources.readers import table_bytes
-
-    assert table_bytes(sf_dir, "documents") > 0
-    with pytest.raises(KeyError, match="unknown table"):
-        table_bytes(sf_dir, "documnets")
-    with pytest.raises(FileNotFoundError):
-        table_bytes(str(tmp_path / "no_such_sf"), "documents")
-
-
 def test_word_shingles_accepts_named_columns(spark):
     """word_shingles(F.col(\"tokens\")) must work: arrays_zip names
     struct fields after NAMED input columns, so the positional access
@@ -438,25 +423,6 @@ def test_read_events_does_not_leak_nanos_flag_on_unrelated_errors(spark):
     with pytest.raises(Exception):
         read_table(spark, "/nonexistent_sf_dir", "events")
     assert spark.conf.get(key, None) == before
-
-
-def test_table_bytes_raises_on_empty_dir(tmp_path):
-    """An existing-but-empty dataset dir is the same size-switch hazard
-    as a missing path: 0 bytes silently steers every size-based plan
-    switch to the small-data shape (r15 review)."""
-    import pytest
-
-    from bigdata_flightanalysis_spark.sources.readers import table_bytes
-
-    d = tmp_path / "events.parquet"
-    d.mkdir()
-    with pytest.raises(FileNotFoundError, match="no data files"):
-        table_bytes(str(tmp_path), "events")
-    (d / "_SUCCESS").write_bytes(b"")  # markers alone are not data
-    with pytest.raises(FileNotFoundError, match="no data files"):
-        table_bytes(str(tmp_path), "events")
-    (d / "part-0.parquet").write_bytes(b"xx")
-    assert table_bytes(str(tmp_path), "events") == 2
 
 
 def test_read_csv_rejects_schema_with_compat_mode(spark, tmp_path):
