@@ -1,8 +1,7 @@
 """Offline consistency check-and-heal for every on-disk state this
-engine maintains — the one entry point unifying the per-store recovery
-hooks (``operators.incremental._recover_store_dir``,
-``streaming.events._recover_state_dir``,
-``queries.retrieval._recover_corpus_stats``).
+engine maintains — the one entry point over the two recovery hooks:
+``util.recover_layout`` (stores and streaming state dirs) and
+``queries.retrieval._recover_corpus_stats`` (BM25 index roots).
 
     python -m bigdata_flightanalysis_spark.fsck <root> [--dry-run]
 
@@ -53,6 +52,8 @@ import argparse
 import os
 import sys
 
+from bigdata_flightanalysis_spark.util import path_lock, recover_layout
+
 INDEX_RELATIONS = ("postings", "doc_stats", "corpus_stats")
 
 
@@ -86,8 +87,6 @@ def _fsck_index(index_path: str, heal: bool) -> list[dict]:
     report-only must not even create the sibling lockfile, at the
     price of reporting a snapshot that can race writers."""
     if heal:
-        from bigdata_flightanalysis_spark.util import path_lock
-
         try:
             with path_lock(index_path):
                 return _fsck_index_unlocked(index_path, heal)
@@ -207,11 +206,11 @@ def _classify_layout(store: str, healed: bool) -> list[dict]:
 
 
 def _fsck_generic(parent: str, entries: list[str], heal: bool) -> list[dict]:
-    """Store/state-dir findings in ``parent``, healed via the store
-    hook. Under heal, each layout is classified and healed inside its
-    maintenance lock (one atomic classify+repair per layout — a
-    residue a concurrent same-host writer already repaired simply
-    yields no finding). ``--dry-run`` takes no lock: report-only must
+    """Store/state-dir findings in ``parent``, healed via
+    :func:`util.recover_layout`. Under heal, each layout is classified
+    and healed inside its maintenance lock (one atomic classify+repair
+    per layout — a residue a concurrent same-host writer already
+    repaired simply yields no finding). ``--dry-run`` takes no lock: report-only must
     not even create the sibling lockfile, at the price of a snapshot
     that can race writers."""
     bases: list[str] = []
@@ -222,12 +221,6 @@ def _fsck_generic(parent: str, entries: list[str], heal: bool) -> list[dict]:
                 if base not in bases:
                     bases.append(base)
     findings: list[dict] = []
-    if heal and bases:
-        from bigdata_flightanalysis_spark.operators.incremental import (
-            _recover_store_dir,
-            _store_lock,
-        )
-
     for base in sorted(bases):
         store = os.path.join(parent, base)
         if heal:
@@ -242,9 +235,9 @@ def _fsck_generic(parent: str, entries: list[str], heal: bool) -> list[dict]:
             if not os.path.isdir(parent):
                 break
             try:
-                with _store_lock(store):
+                with path_lock(store):
                     layout = _classify_layout(store, healed=False)
-                    _recover_store_dir(store)
+                    recover_layout(store)
             except OSError as exc:
                 # a read-only tree / foreign-uid layout must degrade to
                 # an unhealed finding, not kill the whole walk — fsck's

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from bigdata_flightanalysis_spark.functions.text import md5_long, normalize_text
 from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
+from bigdata_flightanalysis_spark.util import _remove_any, recover_layout, swap_layout
 
 
 # What the exact-dedup fingerprint store's rows are a function of; a
@@ -104,30 +105,25 @@ def _single_part_file(tmp: str) -> str:
     return parts[0]
 
 
-def _finalize_pending_fps(
-    spark: SparkSession, state_path: str, pending: str, content_fp: str
-) -> None:
-    """Land the staged batch's fingerprints in the live store as ONE
-    deterministically-named file (``ingest-<bid>.parquet``): the
-    single os.rename is atomic (no torn multi-file append; the name
-    keys on the CONTENT fingerprint, so it is stable across replays),
-    and a replay that finds the target already present skips — no
-    duplicate files. (Duplicate fp ROWS would be harmless anyway — the store is
-    a seen-set probed by left_anti — but idempotent naming keeps
-    replays from growing the store.)"""
-    import shutil as _shutil
-
+def _land_fps(fps: DataFrame, state_path: str, content_fp: str) -> None:
+    """Land a batch's fingerprints in the live store as ONE
+    deterministically-named file (``ingest-<content fp>.parquet``):
+    the single os.rename is atomic (no torn multi-file append; the
+    name keys on the CONTENT fingerprint, so it is stable across
+    replays), and a replay that finds the target already present
+    skips — no duplicate files. (Duplicate fp ROWS would be harmless
+    anyway — the store is a seen-set probed by left_anti — but
+    idempotent naming keeps replays from growing the store.) The one
+    landing of both delivery modes of :func:`incremental_exact_dedup`."""
     target = os.path.join(state_path, f"ingest-{content_fp}.parquet")
     if os.path.exists(target):
         return
-    tmp = pending + ".fpout"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    spark.read.parquet(pending).select("fp").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
+    tmp = state_path + ".pending.fpout"
+    _remove_any(tmp)
+    fps.select("fp").coalesce(1).write.mode("overwrite").parquet(tmp)
     os.makedirs(state_path, exist_ok=True)
     os.rename(_single_part_file(tmp), target)
-    _shutil.rmtree(tmp, ignore_errors=True)
+    _remove_any(tmp)
 
 
 def _recover_pending_batch(
@@ -153,8 +149,6 @@ def _recover_pending_batch(
     pending dir it reads is rmtree'd by the NEXT batch's recovery
     sweep, so a lazy frame consumed after that batch starts would fail
     with FileNotFound."""
-    import shutil as _shutil
-
     from bigdata_flightanalysis_spark.util import read_sidecar
 
     meta = read_sidecar(pending + ".meta.json")
@@ -164,19 +158,11 @@ def _recover_pending_batch(
         or meta.get("batch") != bid_key
         or meta.get("content") != content_fp
     ):
-        _shutil.rmtree(pending, ignore_errors=True)
-        _discard(pending + ".meta.json")
+        _remove_any(pending)
+        _remove_any(pending + ".meta.json")
         return None
-    _finalize_pending_fps(spark, state_path, pending, content_fp)
+    _land_fps(spark.read.parquet(pending), state_path, content_fp)
     return eager_checkpoint(spark.read.parquet(pending).select("id"))
-
-
-def _discard(path: str) -> None:
-    try:
-        os.remove(path)
-    except OSError:
-        pass
-
 
 
 @_serialized_on_store
@@ -242,7 +228,7 @@ def incremental_exact_dedup(
     # heal a compact_flat_store crash window first (no live dir but a
     # complete .old) — otherwise this ingest would see "no store" and
     # silently restart history from its own batch
-    _recover_store_dir(state_path)
+    recover_layout(state_path)
     _check_store_meta(
         state_path,
         _FP_SCHEME,
@@ -289,12 +275,10 @@ def incremental_exact_dedup(
         # until the NEXT batch arrives, so a replay at ANY later
         # crash point — including after the fps landed — re-emits the
         # same survivors instead of dropping them.
-        import shutil as _shutil
-
         from bigdata_flightanalysis_spark.util import stamp_sidecar
 
-        _discard(pending + ".meta.json")
-        _shutil.rmtree(pending, ignore_errors=True)
+        _remove_any(pending + ".meta.json")
+        _remove_any(pending)
         fresh.select("fp", "id").coalesce(1).write.mode("overwrite").parquet(
             pending
         )
@@ -303,14 +287,11 @@ def incremental_exact_dedup(
             {"batch": str(batch_id), "content": content_fp},
             overwrite=True,
         )
-        _finalize_pending_fps(spark, state_path, pending, content_fp)
+        _land_fps(spark.read.parquet(pending), state_path, content_fp)
     else:
         # content-dedup mode: no staging, but the landing is still the
         # single atomic rename — a crash can never leave a torn
         # multi-file append for the replay to anti-join against
-        tmp = pending + ".fpout"
-        import shutil as _shutil
-
         from bigdata_flightanalysis_spark.util import read_sidecar
 
         # Reclaim a TORN exactly-once staging (dir without a complete
@@ -326,15 +307,9 @@ def incremental_exact_dedup(
             os.path.exists(os.path.join(pending, "_SUCCESS"))
             and read_sidecar(pending + ".meta.json")
         ):
-            _shutil.rmtree(pending, ignore_errors=True)
-            _discard(pending + ".meta.json")
-        _shutil.rmtree(tmp, ignore_errors=True)
-        fresh.select("fp").coalesce(1).write.mode("overwrite").parquet(tmp)
-        target = os.path.join(state_path, f"ingest-{content_fp}.parquet")
-        os.makedirs(state_path, exist_ok=True)
-        if not os.path.exists(target):
-            os.rename(_single_part_file(tmp), target)
-        _shutil.rmtree(tmp, ignore_errors=True)
+            _remove_any(pending)
+            _remove_any(pending + ".meta.json")
+        _land_fps(fresh, state_path, content_fp)
     _record_store_meta(state_path, _FP_SCHEME)
     return new_docs.join(
         fresh.select(F.col("id").alias(id_col)), id_col, "left_semi"
@@ -383,7 +358,7 @@ def incremental_near_dup_pairs(
     # probe on incomparable buckets and silently miss every pair
     # heal a compact_flat_store crash window first (see
     # incremental_exact_dedup)
-    _recover_store_dir(store_path)
+    recover_layout(store_path)
     _check_store_meta(
         store_path,
         {
@@ -515,7 +490,7 @@ def incremental_embed_near_dup_pairs(
 
     if n_planes is None:
         n_planes = NEAR_DUP_PLANES
-    _recover_store_dir(store_path)
+    recover_layout(store_path)
     _check_store_granularity(store_path, n_planes)
     batch = eager_checkpoint(
         new_vectors.select(
@@ -697,33 +672,6 @@ def _record_store_granularity(store_path: str, n_planes: int) -> None:
     _record_store_meta(store_path, {"n_planes": n_planes})
 
 
-def _recover_store_dir(store_path: str) -> None:
-    """Close the two-rename crash window of every store rewrite
-    (:func:`rebucket_embed_store`, :func:`compact_embed_store`,
-    :func:`compact_flat_store`): a crash between the renames leaves no
-    live store but a complete ``.old`` — without this hook (called at
-    the top of every ingest and rewrite) the next ingest would see
-    "no store" and silently restart history from its own batch.
-    Rename the old state back; the rewrite can then be re-run. A
-    ``.old`` next to a healthy live store (rewrite completed, final
-    cleanup didn't) is removed — it would otherwise sit at full store
-    size until the next rewrite. So is an orphaned ``.staging`` (a
-    crash DURING a rewrite's staging write — r9 verdict defect #3):
-    it is a near-full-size dir that only the next rewrite would
-    otherwise reclaim, which on an ingest-only workload is never.
-    Safe to remove here: every live rewrite holds the store's
-    maintenance lock across its staging write, and the callers of
-    this hook hold the same lock, so a ``.staging`` seen here is
-    never in-flight (the lock's flock layer enforces this across
-    processes on the same host; multi-host maintenance still needs
-    an external coordinator). Delegates to the shared
-    :func:`util.recover_layout` — fsck and the streaming sinks heal
-    through the same rule, so the logic must have ONE home."""
-    from bigdata_flightanalysis_spark.util import recover_layout
-
-    recover_layout(store_path)
-
-
 @_serialized_on_store
 def rebucket_embed_store(
     spark: SparkSession, store_path: str, n_planes: int
@@ -734,17 +682,16 @@ def rebucket_embed_store(
     plane count (float→double casting is exact, so buckets equal what
     a from-scratch ingest at this granularity assigns), rewrites the
     store hive-partitioned on the new bucket, and records the new
-    granularity. The swap is staging + two renames with ``.old``
-    recovery (:func:`_recover_store_dir`), so a crash at any point
-    leaves a usable store at ONE consistent granularity."""
-    import shutil
-
+    granularity. The staging dir is published with
+    :func:`util.swap_layout` and healed by :func:`util.recover_layout`,
+    so a crash at any point leaves a usable store at ONE consistent
+    granularity."""
     from bigdata_flightanalysis_spark.queries.similarity import _spark_bucket
     from bigdata_flightanalysis_spark.util import stamp_sidecar
 
-    _recover_store_dir(store_path)
+    # the heal also clears an orphaned .staging (we hold the lock)
+    recover_layout(store_path)
     staging = store_path + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
     store = spark.read.parquet(store_path)
     (
         store.drop("bucket")
@@ -758,11 +705,7 @@ def rebucket_embed_store(
         {"n_planes": n_planes},
         overwrite=True,
     )
-    old = store_path + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(store_path, old)
-    os.rename(staging, store_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_layout(staging, store_path)
 
 
 @_serialized_on_store
@@ -781,7 +724,7 @@ def compact_embed_store(spark: SparkSession, store_path: str) -> None:
     explicitly instead."""
     from bigdata_flightanalysis_spark.util import read_sidecar
 
-    _recover_store_dir(store_path)
+    recover_layout(store_path)
     n_planes = read_sidecar(_meta_path(store_path)).get("n_planes")
     if n_planes is None:
         # distinguish the two unstamped cases structurally: a legacy
@@ -818,13 +761,12 @@ def compact_flat_store(spark: SparkSession, store_path: str) -> None:
     admit (their anti-joins each saw the other's rows as absent —
     harmless to probe semantics, they only cost bytes) are dropped.
     Probe results are identical before and after (asserted in tests).
-    Same staging + two-rename ``.old`` swap as every other store
-    rewrite; :func:`_recover_store_dir` heals a crash between the
+    Same :func:`util.swap_layout` publish as every other store
+    rewrite; :func:`util.recover_layout` heals a crash between the
     renames on the next ingest."""
     import math
-    import shutil
 
-    _recover_store_dir(store_path)
+    recover_layout(store_path)
     from bigdata_flightanalysis_spark.util import read_sidecar as _rs
 
     if _rs(_meta_path(store_path)).get("n_planes") is not None:
@@ -852,7 +794,6 @@ def compact_flat_store(spark: SparkSession, store_path: str) -> None:
 
         meta = read_sidecar(sidecar)
     staging = store_path + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
     (
         spark.read.parquet(store_path)
         .dropDuplicates()
@@ -865,11 +806,7 @@ def compact_flat_store(spark: SparkSession, store_path: str) -> None:
         stamp_sidecar(
             os.path.join(staging, "_store_meta.json"), meta, overwrite=True
         )
-    old = store_path + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(store_path, old)
-    os.rename(staging, store_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_layout(staging, store_path)
 
 
 # ---------------------------------------------------------------------------

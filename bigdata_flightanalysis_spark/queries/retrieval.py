@@ -42,6 +42,8 @@ Scale shape:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +61,16 @@ from bigdata_flightanalysis_spark.operators.checkpointing import (
 from bigdata_flightanalysis_spark.queries.catalog import register
 from bigdata_flightanalysis_spark.queries.text import _SQL_TOKENS, _sql_shingles
 from bigdata_flightanalysis_spark.sources.readers import read_table
+from bigdata_flightanalysis_spark.util import (
+    _remove_any,
+    check_sidecar,
+    path_lock,
+    read_sidecar,
+    recover_layout,
+    remove_layout,
+    stamp_sidecar,
+    swap_layout,
+)
 
 # Fixed retrieval query — three terms known to appear in the synthetic
 # corpus vocabulary. A production call would parameterize this list;
@@ -403,16 +415,10 @@ _INDEX_TOKENIZER = TOKENIZER_TAG
 
 
 def _index_meta_path(index_path: str) -> str:
-    import os
-
     return os.path.join(index_path, "_index_meta.json")
 
 
 def _record_index_buckets(index_path: str) -> None:
-    import os
-
-    from bigdata_flightanalysis_spark.util import stamp_sidecar
-
     os.makedirs(index_path, exist_ok=True)
     # overwrite=True: a rebuild clears the old relations first, so the
     # fresh stamp must replace any previous one (util.stamp_sidecar is
@@ -427,8 +433,6 @@ def _record_index_buckets(index_path: str) -> None:
 def _index_buckets(index_path: str) -> int:
     """The bucket modulus this index was BUILT with (pre-round-8
     indexes carry no meta file and used the then-constant 64)."""
-    from bigdata_flightanalysis_spark.util import read_sidecar
-
     return int(read_sidecar(_index_meta_path(index_path)).get("n_buckets", 64))
 
 
@@ -439,8 +443,6 @@ def _check_index_tokenizer(index_path: str) -> None:
     both silently. Lenient comparison (``util.check_sidecar``): an
     absent stamp, or a pre-tag stamp lacking the tokenizer key, is a
     legacy index and accepted."""
-    from bigdata_flightanalysis_spark.util import check_sidecar
-
     check_sidecar(
         _index_meta_path(index_path),
         {"tokenizer": _INDEX_TOKENIZER},
@@ -632,8 +634,6 @@ def serve_bm25_topk(
     caller then removes). The lazy ``bm25_index_topk`` stays exposed
     for plan inspection (partition-pruning tests) and single-writer
     callers."""
-    from bigdata_flightanalysis_spark.util import path_lock
-
     with path_lock(index_path):
         return eager_checkpoint(bm25_index_topk(spark, index_path, terms, k))
 
@@ -646,8 +646,6 @@ def _with_temp_index(spark: SparkSession, prefix: str, populate) -> DataFrame:
     copies leaked the corpus-sized temp dir whenever any leg raised,
     and triplicated the pin-before-rmtree dance)."""
     import tempfile
-
-    from bigdata_flightanalysis_spark.util import remove_layout
 
     index_path = tempfile.mkdtemp(prefix=prefix)
     try:
@@ -674,8 +672,6 @@ def refresh_text_index(
     corpus totals are recomputed from doc_stats (the narrow source of
     truth) on every refresh, never incremented blindly.
     """
-    from bigdata_flightanalysis_spark.util import path_lock
-
     with path_lock(index_path):
         _refresh_text_index_locked(spark, new_docs, index_path)
 
@@ -689,8 +685,6 @@ def _refresh_text_index_locked(
     compaction rmtree's — the same race the dedup stores' ingests
     serialize against (per-path re-entrant lock; its flock layer
     also serializes maintenance from separate same-host processes)."""
-    import os
-
     _check_index_tokenizer(index_path)
     _recover_corpus_stats(index_path)
     if not os.path.exists(f"{index_path}/doc_stats") and not os.path.exists(
@@ -755,13 +749,12 @@ def _refresh_text_index_locked(
         )
     )
     corpus.write.mode("overwrite").parquet(f"{index_path}/corpus_stats.new")
-    # Two-rename swap with .old recovery (same pattern as the
-    # streaming _swap_state_dir/_recover_state_dir pair): a plain
-    # rmtree-then-rename has a crash window that leaves the index with
-    # NO corpus_stats, failing every serve until a batch is replayed.
-    # A crash between the two renames leaves a complete .old that the
-    # next serve/refresh restores via _recover_corpus_stats.
-    _swap_index_dir(f"{index_path}/corpus_stats.new", f"{index_path}/corpus_stats")
+    # util.swap_layout, not rmtree-then-rename: that has a crash window
+    # that leaves the index with NO corpus_stats, failing every serve
+    # until a batch is replayed. A crash between the swap's two renames
+    # leaves a complete .old that the next serve/refresh restores via
+    # _recover_corpus_stats.
+    swap_layout(f"{index_path}/corpus_stats.new", f"{index_path}/corpus_stats")
 
 
 def _recover_corpus_stats(index_path: str) -> None:
@@ -773,45 +766,21 @@ def _recover_corpus_stats(index_path: str) -> None:
     before reading. Called on every serve (:func:`bm25_index_topk`)
     and at the top of every refresh/compact; corpus totals stale by
     one batch then converge on the next refresh, which recomputes
-    them from doc_stats unconditionally. A ``.old`` NEXT TO a healthy
-    live dir is the other crash residue (swap completed, final
-    cleanup didn't) — removed here, or a serve-only workload would
-    carry a full-relation-sized leftover forever.
+    them from doc_stats unconditionally. Each relation heals through
+    :func:`util.recover_layout`, which also removes a ``.old`` next to
+    a healthy live dir and any ``.staging`` residue, so a serve-only
+    workload carries no full-relation-sized leftover.
 
     Holds the index's maintenance lock (re-entrant — refresh/compact
     already hold it when they call this): the heal MUTATES the index
     dir, so an unlocked serve-path call racing an in-process
     refresh/compact mid-swap could otherwise restore ``.old`` onto
     the live path under the writer's feet."""
-    from bigdata_flightanalysis_spark.util import path_lock
-
     with path_lock(index_path):
         _recover_corpus_stats_locked(index_path)
 
 
 def _recover_corpus_stats_locked(index_path: str) -> None:
-    import os
-
-    # residue removal goes through _remove_any, NOT bare rmtree:
-    # rmtree(ignore_errors) silently no-ops on a FILE-shaped
-    # .old/.new/.staging, which made fsck report such residue as
-    # healed on every run while it persisted (same r14 fix as the
-    # generic store heal, util.recover_layout)
-    from bigdata_flightanalysis_spark.util import _remove_any
-
-    for rel in ("corpus_stats", "postings", "doc_stats"):
-        live = f"{index_path}/{rel}"
-        old = live + ".old"
-        if not os.path.exists(live) and os.path.exists(old):
-            if os.path.isdir(old) and not os.path.islink(old):
-                os.rename(old, live)
-            else:
-                # file-shaped .old is garbage, not a restorable
-                # relation (same rule as util.recover_layout)
-                _remove_any(old)
-        elif os.path.exists(live):
-            _remove_any(old)
-
     # Torn refresh/compact tail: both write the recomputed totals to
     # corpus_stats.new BEFORE their final swaps, so a COMPLETE .new
     # (Spark's _SUCCESS marker) whose producing sequence got past the
@@ -821,53 +790,22 @@ def _recover_corpus_stats_locked(index_path: str) -> None:
     # indefinitely. A .new that is incomplete, or whose doc_stats
     # promotion never happened (staging still present → .new reflects
     # the STAGED doc_stats, not the live one), is residue — removed.
+    # The staging evidence is read BEFORE the per-relation heal, which
+    # reclaims every <relation>.staging: a same-sequence crash between
+    # the staging writes and the doc_stats swap must still VETO the
+    # .new. Reclaiming staging residue at every entry matters too: a
+    # stale doc_stats.staging from an aborted compact would otherwise
+    # veto a LATER refresh's legitimate .new forever, leaving totals
+    # permanently stale on a serve-only workload.
+    vetoed = os.path.exists(f"{index_path}/doc_stats.staging")
+    for rel in ("corpus_stats", "postings", "doc_stats"):
+        recover_layout(f"{index_path}/{rel}")
     new = f"{index_path}/corpus_stats.new"
     if os.path.exists(new):
-        if os.path.exists(os.path.join(new, "_SUCCESS")) and not os.path.exists(
-            f"{index_path}/doc_stats.staging"
-        ):
-            _swap_index_dir(new, f"{index_path}/corpus_stats")
+        if os.path.exists(os.path.join(new, "_SUCCESS")) and not vetoed:
+            swap_layout(new, f"{index_path}/corpus_stats")
         else:
             _remove_any(new)
-
-    # Aborted-compact residue: a crash before the swaps strands
-    # full-relation-sized *.staging dirs that only the NEXT compact
-    # would rmtree — forever, on a serve-only workload. Worse, a stale
-    # doc_stats.staging poisons the .new promotion rule above: a LATER
-    # refresh that crashes after writing its legitimate .new would
-    # have it deleted ("staging still present") instead of promoted,
-    # leaving totals permanently stale. Remove staging residue here —
-    # AFTER the .new rule has used its presence as evidence (order
-    # matters: a same-sequence crash between the staging writes and
-    # the doc_stats swap must still VETO the .new, which reflects the
-    # staged, not the live, doc_stats). Safe under the single-writer
-    # contract every recovery hook in this module assumes.
-    # corpus_stats is included even though no current writer stages it
-    # (totals rewrites go via corpus_stats.new): fsck classifies ANY
-    # <relation>.staging as reclaimed-by-this-heal, and the reclamation
-    # must match that classification or a stray corpus_stats.staging
-    # would be reported "healed" on every run while persisting.
-    for rel in ("postings", "doc_stats", "corpus_stats"):
-        _remove_any(f"{index_path}/{rel}.staging")
-
-
-def _swap_index_dir(staging: str, live: str) -> None:
-    """Promote a fully-written staging dir to the live path via the
-    two-rename pattern (.old kept across the window, removed on
-    success); :func:`_recover_corpus_stats` heals a crash between the
-    renames on the next serve/refresh/compact."""
-    import os
-
-    from bigdata_flightanalysis_spark.util import _remove_any
-
-    old = live + ".old"
-    # _remove_any, not rmtree: a FILE-shaped .old would survive rmtree
-    # and make the rename-onto-it below fail (NotADirectoryError)
-    _remove_any(old)
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(staging, live)
-    _remove_any(old)
 
 
 def compact_text_index(spark: SparkSession, index_path: str) -> None:
@@ -885,8 +823,6 @@ def compact_text_index(spark: SparkSession, index_path: str) -> None:
     and df already counted distinct docs. Each rewrite lands via
     staging + two-rename swap with .old recovery, so a crash at any
     point leaves a servable index."""
-    from bigdata_flightanalysis_spark.util import path_lock
-
     with path_lock(index_path):
         _compact_text_index_locked(spark, index_path)
 
@@ -897,9 +833,8 @@ def _compact_text_index_locked(spark: SparkSession, index_path: str) -> None:
     it, a refresh appending between this compaction's postings read
     and its swaps would have its rows land in ``.old`` — rmtree'd,
     silent postings loss."""
-    import shutil
-
     _check_index_tokenizer(index_path)
+    # the heal also reclaims postings/doc_stats .staging residue
     _recover_corpus_stats(index_path)
     # staging lives INSIDE the index dir: os.rename must not cross a
     # filesystem boundary, and the index's parent is the one mount we
@@ -921,11 +856,9 @@ def _compact_text_index_locked(spark: SparkSession, index_path: str) -> None:
         .select("term", "doc_id", "tf", "bucket")
     )
     p_staging = f"{index_path}/postings.staging"
-    shutil.rmtree(p_staging, ignore_errors=True)
     compacted.write.partitionBy("bucket").parquet(p_staging)
 
     d_staging = f"{index_path}/doc_stats.staging"
-    shutil.rmtree(d_staging, ignore_errors=True)
     spark.read.parquet(f"{index_path}/doc_stats").dropDuplicates(
         ["doc_id"]
     ).coalesce(4).write.parquet(d_staging)
@@ -958,9 +891,9 @@ def _compact_text_index_locked(spark: SparkSession, index_path: str) -> None:
     # — a crash between any two swaps leaves a consistent, servable
     # mix (corpus_stats still matches whichever doc_stats is live,
     # by the recovery rule above)
-    _swap_index_dir(p_staging, f"{index_path}/postings")
-    _swap_index_dir(d_staging, f"{index_path}/doc_stats")
-    _swap_index_dir(f"{index_path}/corpus_stats.new", f"{index_path}/corpus_stats")
+    swap_layout(p_staging, f"{index_path}/postings")
+    swap_layout(d_staging, f"{index_path}/doc_stats")
+    swap_layout(f"{index_path}/corpus_stats.new", f"{index_path}/corpus_stats")
 
 
 @register(
@@ -1075,8 +1008,6 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
     explicitly-managed index path and routes corpus changes through
     refresh_text_index, which needs no fingerprint because it never
     caches across corpora."""
-    import os
-
     src = os.path.join(sf_dir, "documents.parquet")
     if not os.path.isdir(src):
         st = os.stat(src)
@@ -1092,10 +1023,7 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
 
 def _served_index_path(spark: SparkSession, sf_dir: str) -> str:
     import atexit
-    import os
     import tempfile
-
-    from bigdata_flightanalysis_spark.util import remove_layout
 
     # realpath key, like util.path_lock: two spellings of the same
     # corpus dir (trailing slash, symlink, relative path) must hit ONE
@@ -1167,8 +1095,6 @@ def build_text_index_from(
     Holds the index's maintenance lock like refresh/compact: a
     rebuild racing either would otherwise interleave its clears with
     their appends/swaps."""
-    from bigdata_flightanalysis_spark.util import path_lock
-
     with path_lock(index_path):
         _build_text_index_from_locked(spark, docs, index_path)
 
@@ -1176,21 +1102,16 @@ def build_text_index_from(
 def _build_text_index_from_locked(
     spark: SparkSession, docs: DataFrame, index_path: str
 ) -> None:
-    from bigdata_flightanalysis_spark.util import _remove_any
-
-    # _remove_any: a FILE squatting on a relation path would survive
+    # Heal first, then clear: the heal leaves no .old/.staging and no
+    # corpus_stats.new (a COMPLETE .new left by a refresh that crashed
+    # before its swap would otherwise survive the rebuild and be
+    # promoted by the next serve OVER the fresh build's totals —
+    # totals computed from the pre-rebuild corpus). _remove_any: a
+    # FILE squatting on a relation path would survive
     # rmtree(ignore_errors) and fail the parquet write below.
-    # .new/.staging residue must go too (r16 review): a COMPLETE
-    # corpus_stats.new left by a refresh that crashed before its swap
-    # would survive the rebuild and be promoted by the next serve's
-    # _recover_corpus_stats OVER the fresh build's totals — totals
-    # computed from the pre-rebuild corpus, silently skewing every
-    # served BM25 score from then on.
+    _recover_corpus_stats_locked(index_path)
     for rel in ("postings", "doc_stats", "corpus_stats"):
         _remove_any(f"{index_path}/{rel}")
-        _remove_any(f"{index_path}/{rel}.old")
-        _remove_any(f"{index_path}/{rel}.new")
-        _remove_any(f"{index_path}/{rel}.staging")
     _record_index_buckets(index_path)
     # _gated_toks: above LARGE_INPUT_BYTES the corpus is
     # scanned+tokenized ONCE (checkpointed token table feeds both the

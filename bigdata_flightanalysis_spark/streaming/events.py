@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from bigdata_flightanalysis_spark.operators.checkpointing import eager_checkpoint
-from bigdata_flightanalysis_spark.util import path_lock
+from bigdata_flightanalysis_spark.util import path_lock, recover_layout, swap_layout
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 
@@ -423,10 +423,14 @@ def upsert_foreach_batch(path: str, key_cols: list[str]):
                 f"upsert sink reserves columns {sorted(reserved)}"
             )
         with path_lock(path):
+            # heal BEFORE the contract check and the read: with only
+            # .old left by a swap crash, the batch would read as a
+            # reset and rebuild state from its own rows alone; replay
+            # idempotence converges the rolled-back batch instead
+            recover_layout(path)
             _check_state_contract(
                 path, {"sink": "upsert", "key_cols": key_cols}
             )
-            _recover_state_dir(path)
             new = batch_df.withColumn("_v", F.lit(batch_id).cast("long"))
             if os.path.exists(path):
                 new = new.unionByName(spark.read.parquet(path))
@@ -464,11 +468,11 @@ def _check_state_contract(path: str, contract: dict) -> None:
     ``rmtree(state_path)`` is the defined reset everywhere in this
     codebase — but the sidecar lives NEXT to the dir and survives it,
     so a reset + re-attach with different parameters must re-stamp,
-    not raise against state that no longer exists. The dir counts as
-    existing if ``.old`` does: a crash between the swap renames
-    leaves only ``.old``, and treating that as "no state" would let a
-    wrong-keyed sink stamp a new contract and then merge the
-    recovered history on the wrong keys.
+    not raise against state that no longer exists. Callers run
+    :func:`util.recover_layout` first: a crash between the swap
+    renames leaves only ``.old``, and reading that as "no state"
+    would let a wrong-keyed sink stamp a new contract and then merge
+    the recovered history on the wrong keys.
 
     Comparison is over the NORMALIZED contract (:func:`_normalize_
     contract`): ``key_cols`` compare as a sorted list — partitioning
@@ -478,7 +482,7 @@ def _check_state_contract(path: str, contract: dict) -> None:
     ordering semantics DO depend on it."""
     contract = _normalize_contract(contract)
     sidecar = path + ".contract.json"
-    if not os.path.exists(path) and not os.path.exists(path + ".old"):
+    if not os.path.exists(path):
         if os.path.exists(sidecar):
             os.remove(sidecar)
     from bigdata_flightanalysis_spark.util import read_sidecar, stamp_sidecar
@@ -513,44 +517,14 @@ def _normalize_contract(contract: dict) -> dict:
     return out
 
 
-def _recover_state_dir(path: str) -> None:
-    """Crash recovery for the two-rename state swap: a crash between
-    ``os.rename(path, old)`` and ``os.rename(staging, path)`` leaves no
-    live dir but a complete ``.old`` — without this check the next
-    micro-batch would silently rebuild state from only its own rows,
-    losing the compacted history (and with it the exactly-once
-    contract). Rename ``.old`` back BEFORE reading; replay idempotence
-    then converges the rolled-back batch. A ``.old`` next to a
-    healthy live dir (swap completed, final cleanup didn't) is
-    removed — it would otherwise sit at full state size forever. So is
-    an orphaned ``.staging`` (crash during the staging write): a live
-    sink would overwrite it next batch anyway, but on an abandoned
-    state dir it persists at full state size — the same residue class
-    the store recovery reclaims. Callers hold the state's maintenance
-    lock, so a ``.staging`` seen here is never in-flight (same-host;
-    multi-host still needs an external coordinator). Delegates to the
-    shared :func:`util.recover_layout` — one rule for stores, state
-    dirs, and fsck."""
-    from bigdata_flightanalysis_spark.util import recover_layout
-
-    recover_layout(path)
-
-
 def _swap_state_dir(merged: DataFrame, path: str) -> None:
-    """Write ``merged`` to ``path`` via staging-dir + rename swap.
-
-    POSIX/HDFS renames are atomic, but the SEQUENCE of two renames is
-    not — :func:`_recover_state_dir` (called before every read) closes
-    the crash window between them. Object stores need a table format
+    """Write ``merged`` to ``path.staging`` and publish it with
+    :func:`util.swap_layout`; every reader heals first with
+    :func:`util.recover_layout`. Object stores need a table format
     (Delta/Iceberg/Hudi) for the same guarantee."""
     staging = path + ".staging"
     merged.write.mode("overwrite").parquet(staging)
-    old = path + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_layout(staging, path)
 
 
 def run_foreach_batch(
@@ -631,6 +605,7 @@ def cdc_upsert_foreach_batch(
                 f"cdc_upsert sink reserves columns {sorted(reserved)}"
             )
         with path_lock(path):
+            recover_layout(path)
             _check_state_contract(
                 path,
                 {
@@ -641,7 +616,6 @@ def cdc_upsert_foreach_batch(
                     "tombstone_value": tombstone_value,
                 },
             )
-            _recover_state_dir(path)
             new = batch_df.withColumn("_v", F.lit(batch_id).cast("long"))
             if os.path.exists(path):
                 new = new.unionByName(spark.read.parquet(path))
@@ -695,7 +669,7 @@ def cdc_snapshot(
     live = ~F.col(tombstone_col).eqNullSafe(F.lit(tombstone_value))
     if heal:
         with path_lock(path):
-            _recover_state_dir(path)
+            recover_layout(path)
             # resolve the parquet footer INSIDE the lock: a sink
             # blocked on this lock could otherwise reach its swap's
             # no-live-dir instant between our heal and our read.
@@ -743,7 +717,7 @@ def cdc_compact_tombstones(
     # the worst case) — hold the state's maintenance lock across the
     # read-count-swap, exactly like the dedup stores' compactions.
     with path_lock(path):
-        _recover_state_dir(path)
+        recover_layout(path)
         # Verify the caller's parameters against the recorded sink
         # contract BEFORE the irreversible drop: compacting with a
         # wrong tombstone_value (or the wrong column) would classify

@@ -402,14 +402,32 @@ def _remove_any(path: str) -> None:
             pass
 
 
+def swap_layout(staging: str, live: str) -> None:
+    """Publish a fully-written ``staging`` dir at ``live``: rename
+    ``live`` to ``live.old``, rename ``staging`` to ``live``, then
+    remove ``.old``. Each rename is atomic on POSIX and HDFS; the pair
+    is not, and a crash between them leaves only a complete ``.old``,
+    which :func:`recover_layout` restores. The ONE publish step of
+    every swapped layout: the incremental stores, the streaming state
+    dirs and the BM25 index relations."""
+    old = live + ".old"
+    # _remove_any, not rmtree: a FILE-shaped .old would survive rmtree
+    # and make the rename onto it fail (NotADirectoryError)
+    _remove_any(old)
+    if os.path.exists(live):
+        os.rename(live, old)
+    os.rename(staging, live)
+    _remove_any(old)
+
+
 def recover_layout(path: str) -> None:
-    """Close the two-rename crash window of a swap-protocol layout
-    (stores, streaming state dirs): no live dir but a complete
-    ``.old`` → rename it back; a ``.old`` next to a healthy live dir
-    and any orphaned ``.staging`` are removed (file-shaped residue
-    included). ONE definition shared by the incremental stores, the
-    streaming sinks, and fsck — their recovery rules must never
-    diverge (fsck heals streaming state through the same hook)."""
+    """Close the two-rename crash window of :func:`swap_layout`: no
+    live dir but a complete ``.old`` → rename it back; a ``.old`` next
+    to a healthy live dir and any orphaned ``.staging`` are removed
+    (file-shaped residue included). Every reader and writer of a
+    swapped layout calls it first, under the layout's
+    :func:`path_lock` (so a ``.staging`` seen here is never in flight),
+    and fsck heals through it too — one rule, never diverging."""
     old = path + ".old"
     if not os.path.exists(path) and os.path.exists(old):
         if os.path.isdir(old) and not os.path.islink(old):

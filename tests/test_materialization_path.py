@@ -1,4 +1,4 @@
-"""One materialization path and one large-input gate.
+"""One materialization path, one large-input gate, one directory swap.
 
 Every checkpoint in the engine and its ``scripts/`` goes through
 ``operators.checkpointing``, so ``SPARK_GRAFT_CHECKPOINT_DIR`` (or an
@@ -9,6 +9,12 @@ executor-local blocks on a cluster.
 Every size-driven plan switch asks ``checkpointing.is_large_input``. A
 ``sizeInBytes`` read or a ``table_bytes`` estimator elsewhere would grow
 a second knee beside ``LARGE_INPUT_BYTES``.
+
+Every swapped layout (stores, streaming state dirs, BM25 index
+relations) publishes through ``util.swap_layout`` and heals through
+``util.recover_layout``. A ``.old`` path built anywhere else in the
+package is a second copy of that protocol; only ``fsck`` may name it,
+to classify residue.
 """
 
 from __future__ import annotations
@@ -21,8 +27,9 @@ from bigdata_flightanalysis_spark.queries.catalog import load_all
 
 PKG_DIR = os.path.dirname(pkg.__file__)
 REPO = os.path.dirname(PKG_DIR)
-SCANNED = (PKG_DIR, os.path.join(REPO, "scripts"))
-ALLOWED = os.path.join(PKG_DIR, "operators", "checkpointing.py")
+SCANNED = {PKG_DIR, os.path.join(REPO, "scripts")}
+CHECKPOINTING = {os.path.join(PKG_DIR, "operators", "checkpointing.py")}
+SWAP_PROTOCOL = {os.path.join(PKG_DIR, "util.py"), os.path.join(PKG_DIR, "fsck.py")}
 
 
 def _is_bare_local_checkpoint(node: ast.AST) -> bool:
@@ -43,13 +50,22 @@ def _is_size_estimator(node: ast.AST) -> bool:
     return False
 
 
-def _outside_checkpointing(is_hit) -> list[str]:
+def _is_old_suffix(node: ast.AST) -> bool:
+    # covers both ``path + ".old"`` and an f-string's ``.old`` tail
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.endswith(".old")
+    )
+
+
+def _hits(is_hit, allowed: set[str], scanned: set[str] = SCANNED) -> list[str]:
     found = []
-    for top in SCANNED:
+    for top in sorted(scanned):
         for root, _dirs, files in os.walk(top):
             for name in files:
                 path = os.path.join(root, name)
-                if not name.endswith(".py") or path == ALLOWED:
+                if not name.endswith(".py") or path in allowed:
                     continue
                 with open(path, encoding="utf-8") as fh:
                     tree = ast.parse(fh.read(), path)
@@ -62,11 +78,15 @@ def _outside_checkpointing(is_hit) -> list[str]:
 
 
 def test_no_bare_local_checkpoint_outside_checkpointing_module():
-    assert _outside_checkpointing(_is_bare_local_checkpoint) == []
+    assert _hits(_is_bare_local_checkpoint, CHECKPOINTING) == []
 
 
 def test_no_size_estimator_outside_checkpointing_module():
-    assert _outside_checkpointing(_is_size_estimator) == []
+    assert _hits(_is_size_estimator, CHECKPOINTING) == []
+
+
+def test_no_old_suffix_outside_swap_protocol_modules():
+    assert _hits(_is_old_suffix, SWAP_PROTOCOL, scanned={PKG_DIR}) == []
 
 
 def test_rerouted_query_checkpoints_into_env_dir(

@@ -319,8 +319,8 @@ def test_corpus_stats_crash_window_recovers_on_serve_and_refresh(
     """Kill between refresh_text_index's two renames: live corpus_stats
     is gone, a complete .old remains. The next SERVE must restore and
     answer correctly; the next REFRESH must restore then converge to
-    the full-build index (mirrors the streaming _recover_state_dir
-    contract)."""
+    the full-build index (the same util.recover_layout heal the
+    streaming state dirs use)."""
     import os
 
     from bigdata_flightanalysis_spark.queries.retrieval import (
@@ -832,12 +832,12 @@ def test_compact_crash_before_corpus_swap_heals_inflated_totals(
         .write.mode("overwrite")
         .parquet(f"{idx}/corpus_stats.inflated")
     )
-    R._swap_index_dir(f"{idx}/corpus_stats.inflated", f"{idx}/corpus_stats")
+    R.swap_layout(f"{idx}/corpus_stats.inflated", f"{idx}/corpus_stats")
     inflated = spark.read.parquet(f"{idx}/corpus_stats").collect()[0]
     assert inflated["n_docs"] == 2 * clean_totals["n_docs"]
 
     # compact, crashing at the corpus_stats promotion (the 3rd swap)
-    real_swap = R._swap_index_dir
+    real_swap = R.swap_layout
     calls = {"n": 0}
 
     def crashing_swap(staging, live):
@@ -846,12 +846,12 @@ def test_compact_crash_before_corpus_swap_heals_inflated_totals(
             raise RuntimeError("simulated crash before corpus_stats swap")
         real_swap(staging, live)
 
-    monkeypatch.setattr(R, "_swap_index_dir", crashing_swap)
+    monkeypatch.setattr(R, "swap_layout", crashing_swap)
     try:
         R.compact_text_index(spark, idx)
     except RuntimeError:
         pass
-    monkeypatch.setattr(R, "_swap_index_dir", real_swap)
+    monkeypatch.setattr(R, "swap_layout", real_swap)
     assert calls["n"] == 3  # postings, doc_stats, corpus_stats
     # the torn state the advisory describes: deduped doc_stats live,
     # inflated corpus_stats live, complete .new waiting
@@ -890,17 +890,17 @@ def test_recover_removes_new_totals_when_doc_stats_unswapped(
     before = [tuple(r) for r in R.bm25_index_topk(spark, idx).collect()]
     totals_before = spark.read.parquet(f"{idx}/corpus_stats").collect()[0]
 
-    real_swap = R._swap_index_dir
+    real_swap = R.swap_layout
 
     def crashing_swap(staging, live):
         raise RuntimeError("simulated crash before any swap")
 
-    monkeypatch.setattr(R, "_swap_index_dir", crashing_swap)
+    monkeypatch.setattr(R, "swap_layout", crashing_swap)
     try:
         R.compact_text_index(spark, idx)
     except RuntimeError:
         pass
-    monkeypatch.setattr(R, "_swap_index_dir", real_swap)
+    monkeypatch.setattr(R, "swap_layout", real_swap)
     assert os.path.exists(f"{idx}/corpus_stats.new/_SUCCESS")
     assert os.path.exists(f"{idx}/doc_stats.staging")
 
@@ -939,10 +939,10 @@ def test_stale_staging_residue_cannot_poison_totals_promotion(
 
     # abort a compact before any swap: strands postings.staging,
     # doc_stats.staging, and a stale corpus_stats.new
-    real_swap = R._swap_index_dir
+    real_swap = R.swap_layout
     monkeypatch.setattr(
         R,
-        "_swap_index_dir",
+        "swap_layout",
         lambda s, l: (_ for _ in ()).throw(RuntimeError("compact crash")),
     )
     try:
@@ -962,12 +962,12 @@ def test_stale_staging_residue_cannot_poison_totals_promotion(
             raise RuntimeError("refresh crash before totals swap")
         real_swap(staging, live)
 
-    monkeypatch.setattr(R, "_swap_index_dir", crash_final_swap)
+    monkeypatch.setattr(R, "swap_layout", crash_final_swap)
     try:
         R.refresh_text_index(spark, docs.where(F.col("doc_id") >= 40), idx)
     except RuntimeError:
         pass
-    monkeypatch.setattr(R, "_swap_index_dir", real_swap)
+    monkeypatch.setattr(R, "swap_layout", real_swap)
     assert crashed["n"] == 1
     assert not os.path.exists(f"{idx}/doc_stats.staging")  # reclaimed at entry
     assert os.path.exists(f"{idx}/corpus_stats.new/_SUCCESS")

@@ -7,6 +7,8 @@ plain ``open(...).write`` can leave, which then fails every later
 import json
 import os
 
+import pytest
+
 from bigdata_flightanalysis_spark.util import atomic_write_json
 
 
@@ -442,6 +444,75 @@ def test_recover_layout_does_not_restore_file_shaped_old(tmp_path):
     recover_layout(str(tmp_path / "other"))
     assert os.path.isdir(tmp_path / "other")
     assert not os.path.lexists(d)
+
+
+def _layout_content(path):
+    part = os.path.join(path, "part-0")
+    if not os.path.lexists(path):
+        return None
+    with open(part, encoding="utf-8") as fh:
+        return fh.read()
+
+
+# (live exists before the swap, a FILE-shaped .old squats, crash step).
+# Steps count swap_layout's calls as they happen: clear .old, live →
+# .old (skipped on a first publish), staging → live, clear .old. The
+# last step comes after the publish; None runs to completion.
+_SWAP_CRASHES = (
+    [(True, False, step) for step in (1, 2, 3, 4, None)]
+    + [(False, False, step) for step in (1, 2, 3, None)]
+    + [(True, True, step) for step in (1, 2, 3, 4, None)]
+)
+
+
+@pytest.mark.parametrize("live_before, file_old, crash_at", _SWAP_CRASHES)
+def test_swap_layout_crash_then_recover_yields_old_or_new(
+    tmp_path, monkeypatch, live_before, file_old, crash_at
+):
+    """A crash at any step of a real swap_layout call, followed by
+    recover_layout, leaves the live dir holding exactly the previous
+    content (absent on a first publish) or exactly the new content,
+    with no .old or .staging residue. The new content is visible only
+    once the staging rename has happened."""
+    from bigdata_flightanalysis_spark import util as U
+
+    live = str(tmp_path / "store")
+    staging = live + ".staging"
+    for path, content in ((live, "old"), (staging, "new")):
+        if path == live and not live_before:
+            continue
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0"), "w", encoding="utf-8") as fh:
+            fh.write(content)
+    if file_old:
+        (tmp_path / "store.old").write_bytes(b"stray")
+
+    steps = {"n": 0}
+
+    def step(real):
+        def wrapped(*args):
+            steps["n"] += 1
+            if steps["n"] == crash_at:
+                raise OSError("simulated crash")
+            return real(*args)
+
+        return wrapped
+
+    monkeypatch.setattr(U, "_remove_any", step(U._remove_any))
+    monkeypatch.setattr(U.os, "rename", step(os.rename))
+    if crash_at is None:
+        U.swap_layout(staging, live)
+    else:
+        with pytest.raises(OSError, match="simulated crash"):
+            U.swap_layout(staging, live)
+    monkeypatch.undo()
+
+    U.recover_layout(live)
+    published = crash_at is None or crash_at == (4 if live_before else 3)
+    before = "old" if live_before else None
+    assert _layout_content(live) == ("new" if published else before)
+    assert not os.path.lexists(live + ".old")
+    assert not os.path.lexists(staging)
 
 
 def test_remove_layout_clears_file_shaped_slot(tmp_path):
