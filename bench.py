@@ -1,24 +1,26 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times every registry query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (round-7 restructure — the driver's tail buffer
-truncated round 6's single ~5.5 KB line mid-JSON, destroying the
-headline metric): the FULL payload (per-query timings + the registry
-sweep) is printed FIRST on its own line, and the LAST line is a
-COMPACT headline object — metric/value/unit/sf/n_queries only, no
-per-query maps, well under any tail buffer. Parsers that want detail
-take the first `{"metric"` line; the driver's last-line parse always
-gets a complete object.
+Each query runs into the ``noop`` sink, so Spark computes every output
+column without shipping rows to the driver (a ``count()`` would let
+Catalyst prune the projections it does not need); a warmup pass primes
+the JVM, codegen and every table's parquet footer first.
 
-Each query is forced with a count() action (no driver materialization
-of payloads); a warmup pass primes the JVM/codegen so the numbers
-measure the plans, not classloading.
+The HEADLINE set carries the precise, first-class numbers. The SWEEP
+times every remaining registry query once (n=1, coarse), so a
+pathological plan in the long tail cannot hide.
 
-Besides the headline set (precise, first-class numbers) the run also
-does a SWEEP: every remaining registry query once (n=1, coarse) under
-the "sweep" key — a pathological plan in the unbenched tail can't
-hide.
+stdout carries exactly two JSON lines, which together fit the driver's
+2000-char tail capture:
+
+1. ``headline_queries_detail``: the slowest per-query timings of both
+   sets, bounded to ``PER_QUERY_LINE_BUDGET`` chars, with the omitted
+   rest disclosed as counts and summed seconds;
+2. ``headline_queries_total``: the contract line (headline total, sf,
+   query, sweep and error counts).
+
+The full map of both sets, plus any errors, goes to BENCH_DETAIL.json.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdata_flightanalysis_spark.queries.catalog import load_all
 from bigdata_flightanalysis_spark.session import get_session
+from bigdata_flightanalysis_spark.util import atomic_write_json
 
 HEADLINE = [
     "flagship_top_segments",
@@ -154,17 +157,12 @@ def sf_label(sf_dir: str) -> float | str:
     return base
 
 
-# The driver's tail capture keeps only the LAST ~2000 characters of
-# stdout (measured: every BENCH_r*.json archives a tail of exactly
-# 2000 chars), so the full detail line — ~6 KB at 176 registry
-# queries — is always truncated mid-JSON and the driver's per-query
-# adjudication (PERF per_query / geomean / scaling) came up empty at
-# r16. The compact line below fills that gap: a budget-bounded
-# single-line JSON printed immediately BEFORE the contract line,
-# carrying the slowest queries first (the ones per-query adjudication
-# is about; the omitted tail is sub-noise at bench SFs) with the
-# omission explicitly disclosed — never silent truncation. Budget =
-# 2000 (tail) - ~220 (contract line + newlines + margin).
+# The driver keeps only the last 2000 characters of stdout (every
+# BENCH_r*.json archives a tail of exactly that length), so the
+# per-query line is bounded: 2000 minus ~220 for the contract line,
+# the newlines and a margin. The slowest queries go in first (they are
+# what per-query adjudication is about; the omitted tail is sub-noise
+# at bench SFs), and the omission is disclosed in the line itself.
 PER_QUERY_LINE_BUDGET = 1750
 
 
@@ -174,188 +172,69 @@ def budgeted_per_query(
     sf_val: float | str,
     budget: int = PER_QUERY_LINE_BUDGET,
 ) -> str:
-    """One-line JSON with the slowest per-query timings from BOTH the
-    headline and sweep maps, greedily filled slowest-first until the
-    serialized line would exceed ``budget`` — so the line always fits
-    the driver's tail buffer whole, with the cheapest queries (not an
-    arbitrary prefix) paying for it. Omissions are disclosed in-line
-    (count + summed seconds per map); values carry 2 decimals (≤ 0.5 %
-    error on anything slow enough to make the cut)."""
+    """The ``headline_queries_detail`` line: per-query timings from
+    BOTH the headline and sweep maps, admitted slowest-first while the
+    rendered line stays within ``budget`` chars, so the cheapest
+    queries (not an arbitrary suffix) pay for the bound. Omissions are
+    disclosed in-line (count + summed seconds per map); values carry 2
+    decimals (<= 0.5 % error on anything slow enough to make the cut).
+    """
     q_part: dict[str, float] = {}
     s_part: dict[str, float] = {}
 
-    def render(nq_om: int, ns_om: int, q_om: float, s_om: float) -> str:
+    def render() -> str:
         return json.dumps(
             {
-                "metric": "headline_queries_compact",
+                "metric": "headline_queries_detail",
                 "value": round(sum(timings.values()), 4),
                 "unit": "sec",
                 "sf": sf_val,
                 "queries": q_part,
                 "sweep": s_part,
-                "n_queries_omitted": nq_om,
-                "n_sweep_omitted": ns_om,
-                "omitted_queries_sec": round(q_om, 2),
-                "omitted_sweep_sec": round(s_om, 2),
+                "n_queries_omitted": len(timings) - len(q_part),
+                "n_sweep_omitted": len(sweep) - len(s_part),
+                "omitted_queries_sec": round(
+                    sum(t for n, t in timings.items() if n not in q_part), 2
+                ),
+                "omitted_sweep_sec": round(
+                    sum(t for n, t in sweep.items() if n not in s_part), 2
+                ),
             },
             separators=(",", ":"),
         )
 
     # deterministic order: slowest first, name as tiebreak
     merged = sorted(
-        [(t, name, True) for name, t in timings.items()]
-        + [(t, name, False) for name, t in sweep.items()],
+        [(t, name, q_part) for name, t in timings.items()]
+        + [(t, name, s_part) for name, t in sweep.items()],
         key=lambda x: (-x[0], x[1]),
     )
-    # fill against the all-omitted disclosure values: the counts and
-    # summed seconds can only SHRINK as entries are admitted
-    max_q_om, max_s_om = sum(timings.values()), sum(sweep.values())
-    taken: list[tuple[str, bool]] = []  # admission order: slowest first
-    for t, name, is_headline in merged:
-        part = q_part if is_headline else s_part
+    line = render()
+    for t, name, part in merged:
+        # render the real line each time: a smaller omitted sum can
+        # serialize longer (19.99 vs 20.0), so no cheaper bound holds
         part[name] = round(t, 2)
-        if len(render(len(timings), len(sweep), max_q_om, max_s_om)) > budget:
-            del part[name]
+        candidate = render()
+        if len(candidate) > budget:
             break
-        taken.append((name, is_headline))
-
-    def render_final() -> str:
-        admitted = set(taken)
-        return render(
-            len(timings) - len(q_part),
-            len(sweep) - len(s_part),
-            sum(t for n, t in timings.items() if (n, True) not in admitted),
-            sum(t for n, t in sweep.items() if (n, False) not in admitted),
-        )
-
-    # a smaller omitted sum can still serialize LONGER (19.99 vs 20.0),
-    # so the fill bound is not a length bound: re-check the final line
-    # and evict the cheapest admitted entries until it fits
-    line = render_final()
-    while len(line) > budget and taken:
-        name, is_headline = taken.pop()
-        del (q_part if is_headline else s_part)[name]
-        line = render_final()
+        line = candidate
     return line
 
 
-def emit_detail(full: dict, detail_path: str) -> None:
-    """Print the per-query detail line and persist it to
-    ``BENCH_DETAIL.json`` — without EVER raising: the compact headline
-    object that follows is the driver's tail-buffer contract, so a
-    serialization or filesystem failure here must degrade to a stderr
-    warning, never abort between the two stdout lines."""
-    # default=str: a non-serializable value that slips into the detail
-    # payload (e.g. an exception object recorded as an error) must not
-    # abort the run between the detail line and the compact contract
-    # line — stringify it rather than raise. The residue default=str
-    # can't absorb (a circular payload) degrades to a minimal
-    # placeholder line instead of raising.
-    try:
-        print(json.dumps(full, default=str))
-    except (TypeError, ValueError) as exc:
-        print(
-            f"warning: detail payload not serializable: {exc}",
-            file=sys.stderr,
-        )
-        print(
-            json.dumps(
-                {
-                    "metric": "headline_queries_detail",
-                    "error": f"payload not serializable: {exc}",
-                }
-            )
-        )
-    try:
-        # absent-or-complete (util.atomic_write_json): this file is
-        # committed per round and read back via rev:path by
-        # bench_compare — a mid-dump ENOSPC/kill used to leave a
-        # truncated JSON in the worktree forever (r16 review)
-        from bigdata_flightanalysis_spark.util import atomic_write_json
-
-        atomic_write_json(
-            detail_path, full, indent=1, default=str, trailing_newline=True
-        )
-    except (OSError, TypeError, ValueError) as exc:
-        # a full disk / read-only checkout — or any serialization
-        # failure default=str can't absorb (circular payload) — must
-        # not leave the huge detail line as the LAST stdout line (the
-        # tail-buffered driver would parse a truncated payload): the
-        # compact line below is the contract and must always print
-        print(f"warning: could not write {detail_path}: {exc}", file=sys.stderr)
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    registry = load_all()
-    spark = get_session("bigdata-flightanalysis-bench")
-
-    # Warmup: prime the JVM/codegen paths and every table's parquet
-    # footer so per-query numbers measure the plans, not first-touch
-    # I/O or classloading.
-    from bigdata_flightanalysis_spark.sources.readers import TABLE_NAMES, read_table
-
-    # Warmup failures must not kill the run before any output exists
-    # (the timed loop below owns per-query error recording; a broken
-    # warmup just means that query's first-touch cost lands in its
-    # timed number instead).
-    for t in TABLE_NAMES:
-        try:
-            read_table(spark, sf_dir, t).count()
-        except Exception:  # noqa: BLE001 — warmup is best-effort
-            pass
-    for warm in ("flagship_top_segments", "doc_bm25_serve_topk"):
-        # doc_bm25_serve_topk also builds the session BM25 index outside
-        # the timed window so its headline number measures pure serve
-        try:
-            registry[warm].fn(spark, sf_dir).count()
-        except Exception:  # noqa: BLE001 — warmup is best-effort
-            pass
-
-    # One query failing must never cost the whole run its numbers
-    # (round 4 lost all perf signal to a single AnalysisException):
-    # record the error, keep timing the rest, exit non-zero at the end.
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-
-    def timed(name: str, fn) -> None:
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).count()
-            timings[name] = round(time.perf_counter() - t0, 4)
-        except Exception as exc:  # noqa: BLE001 — bench must survive any query
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    for name in HEADLINE:
-        if name not in registry:
-            # a HEADLINE typo or a registry rename must cost one
-            # errors{} row, not the whole run's numbers (KeyError
-            # before any output)
-            errors[name] = "KeyError: not in registry"
-            continue
-        timed(name, registry[name].fn)
-
-    # Sweep: every registry query not in the headline set, once each
-    # (n=1 — coarse, but a pathological plan in the long tail can't
-    # hide; headline queries carry the precise numbers).
-    sweep: dict[str, float] = {}
-    for name, q in registry.items():
-        if name in timings or name in errors:
-            continue
-        t0 = time.perf_counter()
-        try:
-            q.fn(spark, sf_dir).count()
-            sweep[name] = round(time.perf_counter() - t0, 4)
-        except Exception as exc:  # noqa: BLE001 — bench must survive any query
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
-    sf_val = sf_label(sf_dir)
-    # NOTE (measurement honesty): headline_total sums SUCCESSFUL
-    # headline queries only — an errored query contributes 0s, so a
-    # round with n_errors > 0 is NOT comparable to a clean round on
-    # `value` alone. The compact line carries n_errors for exactly
-    # that check; cross-round tooling (scripts/bench_compare.py)
-    # compares per-query.
+def emit(
+    timings: dict[str, float],
+    sweep: dict[str, float],
+    errors: dict[str, str],
+    sf_val: float | str,
+    detail_path: str,
+) -> None:
+    """Write the full map to ``detail_path`` and print the two stdout
+    lines. A failed write (full disk, read-only checkout) is a stderr
+    warning: the contract line must always print."""
+    # NOTE (measurement honesty): the headline total sums SUCCESSFUL
+    # headline queries only; an errored query contributes 0 s, so a run
+    # with n_errors > 0 is not comparable to a clean one on `value`
+    # alone. The contract line carries n_errors for exactly that check.
     headline_total = round(sum(timings.values()), 4)
     full: dict = {
         "metric": "headline_queries_detail",
@@ -368,29 +247,14 @@ def main() -> None:
     }
     if errors:
         full["errors"] = errors
-    # Detail line first; the compact headline object LAST so a
-    # tail-buffered reader parsing the final line always gets a
-    # complete (short) JSON object.
-    # Detail to stdout + the in-repo BENCH_DETAIL.json (the driver's
-    # tail buffer keeps only the last line, so per-query history was
-    # lost to archaeology before round 9): overwritten per run,
-    # committed per round — git history IS the per-round archive, and
-    # scripts/bench_compare.py reads past rounds via rev:path specs.
-    emit_detail(
-        full,
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        ),
-    )
-    # Per-query visibility for the tail-buffered driver (r16 verdict
-    # item 1): a budget-bounded slowest-first per-query line directly
-    # BEFORE the contract line — both fit the 2000-char tail together,
-    # so the driver can adjudicate per-query speedups and c8/c32
-    # scaling instead of parsing a truncated detail line. Additions
-    # only: the detail line, BENCH_DETAIL.json and the contract line
-    # below are unchanged.
+    try:
+        # absent-or-complete: the file is committed and read back via
+        # rev:path specs by scripts/bench_compare.py
+        atomic_write_json(detail_path, full, indent=1, trailing_newline=True)
+    except OSError as exc:
+        print(f"warning: could not write {detail_path}: {exc}", file=sys.stderr)
     print(budgeted_per_query(timings, sweep, sf_val))
-    compact: dict = {
+    contract = {
         "metric": "headline_queries_total",
         "value": headline_total,
         "unit": "sec",
@@ -399,8 +263,75 @@ def main() -> None:
         "n_sweep": len(sweep),
         "n_errors": len(errors),
     }
-    print(json.dumps(compact))
+    print(json.dumps(contract))
     sys.stdout.flush()
+
+
+def force(df) -> None:
+    """Run ``df`` to completion into the ``noop`` sink: every output
+    column is computed, nothing is collected."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    registry = load_all()
+    spark = get_session("bigdata-flightanalysis-bench")
+
+    # Warmup: prime the JVM/codegen paths and every table's parquet
+    # footer so per-query numbers measure the plans, not first-touch
+    # I/O or classloading. Warmup is best-effort: a failure here just
+    # means that query's first-touch cost lands in its timed number,
+    # and the timed loop below records the error.
+    from bigdata_flightanalysis_spark.sources.readers import TABLE_NAMES, read_table
+
+    for t in TABLE_NAMES:
+        try:
+            read_table(spark, sf_dir, t).count()
+        except Exception:  # noqa: BLE001 — warmup is best-effort
+            pass
+    for warm in ("flagship_top_segments", "doc_bm25_serve_topk"):
+        # doc_bm25_serve_topk also builds the session BM25 index outside
+        # the timed window so its headline number measures pure serve
+        try:
+            force(registry[warm].fn(spark, sf_dir))
+        except Exception:  # noqa: BLE001 — warmup is best-effort
+            pass
+
+    # One query failing must never cost the whole run its numbers:
+    # record the error, keep timing the rest, exit non-zero at the end.
+    timings: dict[str, float] = {}
+    sweep: dict[str, float] = {}
+    errors: dict[str, str] = {}
+
+    def timed(name: str, fn, into: dict[str, float]) -> None:
+        t0 = time.perf_counter()
+        try:
+            force(fn(spark, sf_dir))
+            into[name] = round(time.perf_counter() - t0, 4)
+        except Exception as exc:  # noqa: BLE001 — bench must survive any query
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+
+    for name in HEADLINE:
+        if name not in registry:
+            # a HEADLINE typo or a registry rename costs one errors{}
+            # row, not the whole run's numbers
+            errors[name] = "KeyError: not in registry"
+            continue
+        timed(name, registry[name].fn, timings)
+    for name, q in registry.items():
+        if name not in timings and name not in errors:
+            timed(name, q.fn, sweep)
+
+    emit(
+        timings,
+        sweep,
+        errors,
+        sf_label(sf_dir),
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+        ),
+    )
     spark.stop()
     if errors:
         sys.exit(1)

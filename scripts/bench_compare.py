@@ -1,15 +1,15 @@
 #!/usr/bin/env python
-"""Diff two bench outputs (bench.py JSON lines, driver BENCH_r*.json
+"""Diff two bench outputs (bench.py's stdout, driver BENCH_r*.json
 wrappers, or the committed BENCH_DETAIL.json): per-query ratios over
 the common headline set, worst regressions first — the
 round-over-round perf triage tool.
 
     python scripts/bench_compare.py BENCH_r05.json /tmp/bench_now.json
 
-Since round 9 every bench run writes its full detail payload to
-BENCH_DETAIL.json (committed per round), so past rounds are readable
-straight from git history with a rev:path spec — preferred over the
-driver wrappers, whose tails are truncated:
+A stdout capture or a wrapper's tail carries the bounded
+``headline_queries_detail`` line (the slowest queries only);
+BENCH_DETAIL.json carries the full map and is committed, so past
+rounds are readable straight from git history with a rev:path spec:
 
     python scripts/bench_compare.py 'r8-tag:BENCH_DETAIL.json' BENCH_DETAIL.json
 """
@@ -47,8 +47,8 @@ def _pick(candidates: list[str], path: str) -> dict:
     """The payload-selection policy, defined once for both the
     multi-line-file and driver-wrapper paths: parse every candidate,
     prefer the LAST payload carrying per-query detail (bench.py prints
-    detail first, compact last; a tail can hold more than one run),
-    fall back to the last payload of any kind."""
+    the detail line, then the contract line; a tail can hold more than
+    one run), fall back to the last payload of any kind."""
     payloads = []
     for line in candidates:
         line = line.strip()
@@ -57,7 +57,7 @@ def _pick(candidates: list[str], path: str) -> dict:
         try:
             payloads.append(json.loads(line))
         except json.JSONDecodeError:
-            continue  # truncated mid-line (the round-6 failure mode)
+            continue  # cut mid-line (a tail's first line can be)
     detailed = [p for p in payloads if "queries" in p]
     if detailed:
         return detailed[-1]
@@ -71,23 +71,20 @@ def _load(path: str) -> dict:
     try:
         d = json.loads(text)
     except json.JSONDecodeError:
-        # Raw bench.py output is TWO JSON lines since round 7 (detail
-        # payload first, compact headline last) — a whole-file parse
-        # fails with "Extra data". Prefer the line carrying per-query
-        # detail, else the last parseable one.
+        # Raw bench.py stdout is two JSON lines (bounded detail, then
+        # the contract line), so a whole-file parse fails with "Extra
+        # data". Prefer the line carrying per-query detail, else the
+        # last parseable one.
         return _pick(text.splitlines(), path)
     if "queries" in d:
         return d
     if "tail" not in d:
-        # a compact headline payload saved on its own (e.g. a captured
-        # last line) — totals-only, main() compares the values
+        # a contract line saved on its own (e.g. a captured last
+        # line) — totals-only, main() compares the values
         return d
-    # Driver wrapper: bench.py prints the detail payload (has
-    # "queries") first and a compact headline object last. Scan every
-    # payload line in the tail and take the LAST one carrying
-    # per-query detail; fall back to the last payload of any kind.
-    # (The old re.search took the FIRST match — wrong run when the
-    # tail held more than one.)
+    # Driver wrapper: the tail holds the bench stdout, possibly of
+    # more than one run; take the LAST payload carrying per-query
+    # detail, else the last payload of any kind.
     return _pick(re.findall(r'\{"metric".*', d.get("tail", "")), path)
 
 
@@ -96,16 +93,14 @@ def main() -> None:
         raise SystemExit(__doc__)
     a, b = _load(sys.argv[1]), _load(sys.argv[2])
     if "queries" not in a or "queries" not in b:
-        # compact-only payload(s): totals are all there is to compare.
-        # A payload without even 'value' (bench's serialization-failure
-        # placeholder carries only metric+error) gets a diagnostic, not
-        # a KeyError traceback.
+        # contract-line payload(s): totals are all there is to compare.
+        # A payload without even 'value' (some other JSON file) gets a
+        # diagnostic, not a KeyError traceback.
         for side, payload in (("a", a), ("b", b)):
             if "value" not in payload:
                 raise SystemExit(
                     f"payload {side} has no 'value' or 'queries' "
-                    f"(keys: {sorted(payload)}) — not a bench result; "
-                    f"error: {payload.get('error', 'n/a')}"
+                    f"(keys: {sorted(payload)}) — not a bench result"
                 )
         print(
             f"totals only (no per-query detail): {a['value']}s -> "

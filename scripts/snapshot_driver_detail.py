@@ -20,9 +20,9 @@ in ``BENCH_r{N}.json`` (the wrapper is written only by the driver, so
 agreement identifies the run). Refuses to overwrite an existing
 snapshot, and exits non-zero on a mismatch so a builder run that
 already clobbered the detail is caught loudly instead of archived as
-if it were the driver's. Falls back automatically to
-``recover_driver_detail.py`` semantics is NOT done here — if the
-detail was clobbered, run that script on the wrapper instead.
+if it were the driver's. A clobbered detail is not lost: the wrapper's
+``tail`` holds the whole bounded ``headline_queries_detail`` line (the
+slowest queries), which ``bench_compare.py`` reads directly.
 """
 
 from __future__ import annotations
@@ -67,8 +67,8 @@ def main() -> int:
         print(
             f"BENCH_DETAIL.json headline {detail.get('value')} != driver wrapper "
             f"{driver_value} — the detail was overwritten by a later builder run.\n"
-            f"Recover from the wrapper tail instead:\n"
-            f"    python scripts/recover_driver_detail.py {os.path.basename(wrapper_path)}",
+            f"The wrapper tail holds the bounded per-query line; compare it directly:\n"
+            f"    python scripts/bench_compare.py <baseline> {os.path.basename(wrapper_path)}",
             file=sys.stderr,
         )
         return 1

@@ -401,8 +401,10 @@ def test_pagerank_checkpoints_capture_loop_partitioning(spark):
     ordering, so every round (and any downstream node-keyed join)
     runs exchange-free and sort-free on that side — without the
     capture, each round re-shuffled AND re-sorted the full edge list
-    (see plans/r17/pagerank_round_before.txt, 4 exchanges/round →
-    0-1 after)."""
+    (4 exchanges/round → 0-1 after; the plan dump is
+    `git show edb32e2:plans/r17/pagerank_round_before.txt`, and
+    doc_dup_canonical_pagerank's counts are in
+    plans/plan_stats_sf0.001.json)."""
     from bigdata_flightanalysis_spark.operators.graph import pagerank
 
     edges = spark.range(4000).select(

@@ -3,17 +3,27 @@
 This mirrors the driver's t2 harness (``__spark_entry__.py``):
 row-count + column names + order-insensitive exact value comparison.
 Runs at sf0.001 for speed; the driver re-checks at sf0.01.
+
+Each test also checks the query's plan shape (``plan_stats``: scans,
+Exchanges, join strategies, windows, Python nodes) against the counts
+committed in ``plans/plan_stats_sf0.001.json``, so a plan change is a
+reviewed diff of that file rather than a silent one.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import warnings
 
 import duckdb
 import pytest
 
+from bigdata_flightanalysis_spark.plans.introspect import plan_stats
 from bigdata_flightanalysis_spark.queries.catalog import load_all
 from bigdata_flightanalysis_spark.schemas import TABLE_NAMES
 
+PLAN_STATS_FILE = os.path.join("plans", "plan_stats_sf0.001.json")
 REGISTRY = load_all()
 ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
@@ -30,15 +40,50 @@ def duck(sf_dir):
     con.close()
 
 
+@pytest.fixture(scope="module")
+def committed_plan_stats(sf_dir):
+    """The committed plan-shape counts, or None off sf0.001: table
+    sizes steer broadcast thresholds and size gates, so the counts
+    hold for the scale they were taken at only."""
+    if os.path.basename(sf_dir.rstrip("/")) != "sf0.001":
+        warnings.warn(
+            f"plan-stats check skipped: {PLAN_STATS_FILE} holds sf0.001 "
+            f"plans and sf_dir is {sf_dir}"
+        )
+        return None
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, PLAN_STATS_FILE)) as f:
+        return json.load(f)
+
+
+def _check_plan_stats(name, stats, committed):
+    if committed is None:
+        return
+    entry = json.dumps({name: stats}, sort_keys=True)
+    if name not in committed:
+        pytest.fail(f"{name}: no entry in {PLAN_STATS_FILE}; add {entry}")
+    was = committed[name]
+    diffs = [
+        f"{k} committed {was.get(k)} now {stats.get(k)}"
+        for k in sorted(set(was) | set(stats))
+        if was.get(k) != stats.get(k)
+    ]
+    assert not diffs, (
+        f"{name}: plan shape changed: {'; '.join(diffs)}. If intended, "
+        f"replace its entry in {PLAN_STATS_FILE} with {entry}"
+    )
+
+
 # the ONE canonicalization definition (r16 review: three hand-rolled
 # copies used to drift independently)
 from bigdata_flightanalysis_spark.parity import rows_sorted as _rows_sorted
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(name, spark, sf_dir, duck):
+def test_query_matches_oracle(name, spark, sf_dir, duck, committed_plan_stats):
     q = REGISTRY[name]
     sdf = q.fn(spark, sf_dir)
+    stats = plan_stats(sdf)  # before collect(): the action reuses this plan
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
@@ -56,10 +101,13 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     b = _rows_sorted(duck_cols, duck_rows)
     mismatches = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+    _check_plan_stats(name, stats, committed_plan_stats)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_query_runs(name, spark, sf_dir):
+def test_rows_only_query_runs(name, spark, sf_dir, committed_plan_stats):
     sdf = REGISTRY[name].fn(spark, sf_dir)
+    stats = plan_stats(sdf)
     assert len(sdf.columns) > 0
     assert sdf.count() >= 0
+    _check_plan_stats(name, stats, committed_plan_stats)
