@@ -71,10 +71,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
+    """DuckDB-runnable ANSI SQL twin for each query."""
     registry = load_all()
-    return {
-        name: registry[name].oracle
-        for name in _verification_order()
-        if registry[name].oracle is not None
-    }
+    return {name: registry[name].oracle for name in _verification_order()}

@@ -47,8 +47,7 @@ def main(argv: list[str] | None = None) -> None:
             q = registry[name]
             if args.tag and not any(args.tag in t for t in q.tags):
                 continue
-            kind = "oracle" if q.oracle else "rows-only"
-            print(f"{name:45s} [{kind}] {','.join(q.tags)}")
+            print(f"{name:45s} {','.join(q.tags)}")
         return
 
     if args.name not in registry:

@@ -2,8 +2,8 @@
 
 Every operator from SURVEY.md §2 (plus the §7 phase-4 extensions) is
 exposed as a named query: a PySpark callable ``(spark, sf_dir) ->
-DataFrame`` and, where SQL-expressible, an ANSI-SQL oracle string that
-DuckDB runs on the same parquet for differential checking.
+DataFrame`` and a required ANSI-SQL oracle string that DuckDB runs on
+the same parquet for differential checking.
 
 Determinism rules applied everywhere (SURVEY.md §5, §7 hard-parts):
 - every computed column aliased identically in Spark and SQL,
@@ -27,7 +27,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class EngineQuery:
     name: str
     fn: QueryFn
-    oracle: str | None  # None → non-SQL-expressible; driver does rows-only check
+    oracle: str
     description: str = ""
     tags: tuple[str, ...] = field(default=())
 
@@ -37,7 +37,7 @@ REGISTRY: dict[str, EngineQuery] = {}
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str,
     description: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:

@@ -4,7 +4,7 @@ phase 4: the LLM-training-data-pipeline surface).
 Everything is built from codegen'd built-in expressions; hashing is the
 md5-based 60-bit family (``functions.text.md5_long``) specifically so
 MinHash signatures and fingerprints are bit-identical in the DuckDB
-oracle — a much stronger check than rows-only.
+oracle.
 """
 
 from __future__ import annotations

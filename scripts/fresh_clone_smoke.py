@@ -23,10 +23,10 @@ import sys
 import tempfile
 
 # Fast files only, and none of them opens a SparkSession — the point is
-# tooling sanity in seconds, not a second full suite (partest covers that).
+# tooling sanity in seconds, not a second full suite (the tier-1 pytest
+# run in ROADMAP.md covers that).
 TOOLING_TESTS = [
     "tests/test_verification_order.py",
-    "tests/test_partest.py",
     "tests/test_bench_tools.py",
     "tests/test_fsck_properties.py",
     "tests/test_util.py",
@@ -50,10 +50,9 @@ spark = (
 try:
     df = __spark_entry__.entry(spark)
     # collect(), not count(): count() lets Catalyst PRUNE the final
-    # projection, so an expression that throws only at evaluation
+    # projection, so an expression that fails only at evaluation
     # (ANSI cast, UDF error) would pass the smoke and fail the
-    # driver's collect-based gate — the same trap
-    # verify_driver_surface.py documents (r16 review)
+    # driver's collect-based gate (tests/test_entry.py collects too)
     rows = df.collect()
     n = len(rows)
     cols = len(df.columns)

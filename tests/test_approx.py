@@ -1,5 +1,6 @@
-"""approx_count_distinct must stay within its configured error bound
-of the exact answer (rows-only driver check otherwise)."""
+"""Approximate operators (sketches, int8 quantization) stay within
+their configured error bounds of the exact answer, and count-min
+sketches merge the same in any partition order."""
 
 from __future__ import annotations
 

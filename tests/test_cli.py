@@ -34,7 +34,8 @@ def test_engine_cli_list_and_run(capsys):
     main(["list", "--tag", "tpch"])
     out = capsys.readouterr().out
     assert "q1_pricing_summary" not in out  # tagged relational, not tpch
-    assert "q6_forecast_revenue" in out and "[oracle]" in out
+    assert "q6_forecast_revenue" in out
+    assert all("tpch" in line.split()[-1] for line in out.splitlines())
 
     main(["run", "q6_forecast_revenue", "--limit", "5"])
     out = capsys.readouterr().out

@@ -1,8 +1,9 @@
 """Differential tests: every registered query vs its DuckDB oracle.
 
-This mirrors the driver's t2 harness (``__spark_entry__.py``):
-row-count + column names + order-insensitive exact value comparison.
-Runs at sf0.001 for speed; the driver re-checks at sf0.01.
+This mirrors the driver's t2 harness: each ``__spark_entry__.queries()``
+entry is run and compared with the matching ``oracle_sql()`` entry by
+row count, column names and an order-insensitive exact value
+comparison. Runs at sf0.001 for speed; the driver re-checks at sf0.01.
 
 Each test also checks the query's plan shape (``plan_stats``: scans,
 Exchanges, join strategies, windows, Python nodes) against the counts
@@ -19,14 +20,13 @@ import warnings
 import duckdb
 import pytest
 
+import __spark_entry__ as e
 from bigdata_flightanalysis_spark.plans.introspect import plan_stats
-from bigdata_flightanalysis_spark.queries.catalog import load_all
 from bigdata_flightanalysis_spark.schemas import TABLE_NAMES
 
 PLAN_STATS_FILE = os.path.join("plans", "plan_stats_sf0.001.json")
-REGISTRY = load_all()
-ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
-ROWS_ONLY_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
+QUERIES = e.queries()
+ORACLES = e.oracle_sql()
 
 
 @pytest.fixture(scope="module")
@@ -79,15 +79,14 @@ def _check_plan_stats(name, stats, committed):
 from bigdata_flightanalysis_spark.parity import rows_sorted as _rows_sorted
 
 
-@pytest.mark.parametrize("name", ORACLE_QUERIES)
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, duck, committed_plan_stats):
-    q = REGISTRY[name]
-    sdf = q.fn(spark, sf_dir)
+    sdf = QUERIES[name](spark, sf_dir)
     stats = plan_stats(sdf)  # before collect(): the action reuses this plan
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
-    rel = duck.execute(q.oracle)
+    rel = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in rel.description]
     duck_rows = rel.fetchall()
 
@@ -103,11 +102,3 @@ def test_query_matches_oracle(name, spark, sf_dir, duck, committed_plan_stats):
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
     _check_plan_stats(name, stats, committed_plan_stats)
 
-
-@pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
-def test_rows_only_query_runs(name, spark, sf_dir, committed_plan_stats):
-    sdf = REGISTRY[name].fn(spark, sf_dir)
-    stats = plan_stats(sdf)
-    assert len(sdf.columns) > 0
-    assert sdf.count() >= 0
-    _check_plan_stats(name, stats, committed_plan_stats)

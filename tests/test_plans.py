@@ -21,35 +21,23 @@ def registry():
 
 @pytest.fixture(scope="module")
 def registry_plans(spark, registry):
-    """Executed-plan string per oracle-backed registry query, built
-    ONCE and shared by the four registry-wide sweeps below — each used
-    to rebuild all 175 plans itself, which was 4x the suite's single
-    biggest cost (4 x ~70 s). Returns (plans, errors, oracle_backed):
-    a query whose plan can't be produced lands in `errors` so each
-    sweep keeps its
-    own error semantics (the UDF and CartesianProduct guards fail on
-    any error; the scan/window guards skip, their failure detail owned
-    elsewhere). Built at sf0.01 — the stricter frame for
-    size-dependent planning: a cross join whose build side broadcasts
-    at sf0.001 can degrade to CartesianProduct at sf0.01.
-
-    Covers the WHOLE registry, including any oracle-less entry
-    (EngineQuery.oracle permits None) — the scan and window guards
-    always swept every query, and an oracle-less query must not
-    silently escape them. `oracle_backed` carries the names the UDF
-    and CartesianProduct sweeps restrict themselves to, preserving
-    their historical scope."""
+    """Executed-plan string per registry query, built ONCE and shared
+    by the registry-wide sweeps below: building every plan takes ~70 s.
+    Returns (plans, errors): a query whose plan can't be produced lands
+    in `errors` so each sweep keeps its own error semantics (the UDF
+    and CartesianProduct guards fail on any error; the scan/window
+    guards skip, their failure detail owned elsewhere). Built at sf0.01
+    — the stricter frame for size-dependent planning: a cross join
+    whose build side broadcasts at sf0.001 can degrade to
+    CartesianProduct at sf0.01."""
     plans: dict[str, str] = {}
     errors: dict[str, str] = {}
-    oracle_backed: set[str] = set()
     for name, q in registry.items():
-        if q.oracle is not None:
-            oracle_backed.add(name)
         try:
             plans[name] = _plan(q.fn(spark, SF))
         except Exception as exc:  # noqa: BLE001 — consumers decide severity
             errors[name] = f"{type(exc).__name__}: {exc}"[:120]
-    return plans, errors, oracle_backed
+    return plans, errors
 
 
 def _plan(df) -> str:
@@ -317,22 +305,14 @@ def test_dup_clusters_hash_stable_under_env_checkpoint_dir(
 
 def test_no_python_row_udfs_in_oracle_queries(registry_plans):
     """BatchEvalPython (row-at-a-time Python UDF) must never appear;
-    ArrowEvalPython/mapInPandas only in the multimodal path. Same
-    sweep also asserts no un-broadcast CartesianProduct anywhere in
-    the registry — the spot checks on the join-heavy queries below
-    guard specific shapes, this guards the long tail (a cross join
-    that loses its equi-key to a refactor shuffles |A|x|B| at scale).
-    A query whose plan can't be built at all fails here too (this
-    sweep never skipped errors)."""
-    plans, errors, oracle_backed = registry_plans
-    assert {n: e for n, e in errors.items() if n in oracle_backed} == {}
+    ArrowEvalPython/mapInPandas only in the multimodal path. A query
+    whose plan can't be built at all fails here too."""
+    plans, errors = registry_plans
+    assert errors == {}
     for name, plan in plans.items():
-        if name not in oracle_backed:
-            continue
         assert "BatchEvalPython" not in plan, name
         if "multimodal" not in name:
             assert "ArrowEvalPython" not in plan, name
-        assert "CartesianProduct" not in plan, name
 
 
 def test_range_join_is_not_nested_loop(spark, registry):
@@ -535,27 +515,17 @@ def test_no_cartesian_product_in_any_registry_query(registry_plans):
     point of the check distinguishing them.)
 
     A query whose plan can't even be produced must not silently escape
-    the guard (r11 verdict finding #3): failed names are collected and
-    asserted against a documented allowlist — expected EMPTY, since
-    every oracle-backed registry query plans cleanly. Other tests own
-    the per-query failure detail; this keeps the guard's coverage
-    honest."""
-    plan_failed_allowlist: set[str] = set()  # expected empty — see above
-    plans, errors, oracle_backed = registry_plans
+    the guard (r11 verdict finding #3): every registry query must plan.
+    Other tests own the per-query failure detail; this keeps the
+    guard's coverage honest."""
+    plans, errors = registry_plans
     offenders = [
-        name
-        for name, plan in plans.items()
-        if name in oracle_backed and "CartesianProduct" in plan
+        name for name, plan in plans.items() if "CartesianProduct" in plan
     ]
     assert offenders == []
-    unexpected = [
-        (n, e)
-        for n, e in errors.items()
-        if n in oracle_backed and n not in plan_failed_allowlist
-    ]
-    assert not unexpected, (
+    assert errors == {}, (
         "queries escaped the CartesianProduct guard (plan could not be "
-        f"produced at sf0.01): {unexpected}"
+        f"produced at sf0.01): {errors}"
     )
 
 
@@ -674,7 +644,7 @@ def test_no_full_width_scan_in_any_registry_query(registry_plans):
     allowed = {"orders_profile", "orders_profile_approx"}
     pat = re.compile(r"FileScan parquet \[([^\]]*)\].*?/(\w+)\.parquet")
     offenders = []
-    plans, _errors, _oracle_backed = registry_plans  # errors skip: detail owned elsewhere
+    plans, _errors = registry_plans  # errors skip: detail owned elsewhere
     for name, plan in plans.items():
         if name in allowed:
             continue
@@ -755,7 +725,7 @@ def test_global_windows_only_on_documented_bounded_inputs(registry_plans):
     # itself means the partition spec is empty
     first_arg = re.compile(r"windowspecdefinition\(([^,)]+)")
     offenders = []
-    plans, _errors, _oracle_backed = registry_plans  # errors skip: detail owned elsewhere
+    plans, _errors = registry_plans  # errors skip: detail owned elsewhere
     for name, plan in plans.items():
         if name in allowed:
             continue
@@ -817,7 +787,7 @@ def test_nested_loop_joins_only_on_documented_bounded_builds(registry_plans):
         "embed_quantized_topk",               # broadcast queries + scale rows
         "part_affinity_topk",                 # broadcast top-k anchor parts
     }
-    plans, errors, _oracle_backed = registry_plans  # errors fail the CartesianProduct guard
+    plans, errors = registry_plans  # errors fail the CartesianProduct guard
     stale = allowed - set(plans) - set(errors)
     assert not stale, (
         "BNLJ allowlist names no longer in the registry (renamed/"

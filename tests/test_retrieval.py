@@ -275,11 +275,9 @@ def test_bm25_lifecycle_entries_leave_no_temp_index(spark, tmp_path, monkeypatch
     corpus-sized index dirs under /tmp (round-7 defect).
 
     mkdtemp is redirected into this test's own tmp_path: the cleanup
-    contract is process-local, and snapshot-diffing the SHARED temp
-    root made the assert trip on a sibling pytest process's in-flight
-    bm25_index_* dir when the suite runs files concurrently
-    (scripts/partest.py, observed r13) — that dir is the sibling's
-    live build, not a leak."""
+    contract is process-local, and another process may share the temp
+    root, so its in-flight bm25_index_* dir would read as a leak in a
+    snapshot diff of the shared root."""
     import os
     import tempfile
 

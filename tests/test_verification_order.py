@@ -96,10 +96,8 @@ def test_live_queries_and_oracles_share_the_order():
     qs = list(e.queries())
     oracles = e.oracle_sql()
     assert set(qs) == set(registry)
-    assert list(oracles) == [n for n in qs if n in oracles]
-    assert oracles == {
-        n: q.oracle for n, q in registry.items() if q.oracle is not None
-    }
+    assert list(oracles) == qs
+    assert oracles == {n: q.oracle for n, q in registry.items()}
 
 
 def test_live_window_holds_every_stalest_query():
