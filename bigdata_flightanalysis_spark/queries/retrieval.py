@@ -133,7 +133,7 @@ def _bm25_oracle() -> str:
     """
 
 
-def _bm25_score(terms: tuple[str, ...]) -> F.Column:
+def _bm25_score() -> F.Column:
     """The BM25 score expression over (tf{i}, df{i}, dl, n_docs,
     avgdl) columns — ONE definition shared by the inline query and
     the index-serving path, so the 'served scores are bit-identical
@@ -141,7 +141,7 @@ def _bm25_score(terms: tuple[str, ...]) -> F.Column:
     copies staying character-identical."""
     half = F.lit(0.5)
     score = None
-    for i in range(len(terms)):
+    for i in range(len(BM25_TERMS)):
         idf = ((F.col("n_docs") - F.col(f"df{i}")).cast("double") + half) / (
             F.col(f"df{i}").cast("double") + half
         )
@@ -170,15 +170,7 @@ def _bm25_score(terms: tuple[str, ...]) -> F.Column:
     "in fixed term order; top-k is TakeOrderedAndProject.",
     tags=("text", "retrieval"),
 )
-def doc_bm25_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    terms: tuple[str, ...] = BM25_TERMS,
-) -> DataFrame:
-    """Registry entry pins ``terms`` to BM25_TERMS (closed oracle);
-    callers (e.g. scripts/scale_smoke.py) may pass any term list —
-    the plan shape (one broadcast stats row, pure-expression scores,
-    TakeOrderedAndProject) is term-independent."""
+def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     toks = _toks_of(docs)
 
@@ -189,7 +181,7 @@ def doc_bm25_topk(
             F.sum(F.array_contains("t", t).cast("int"))
             .cast("bigint")
             .alias(f"df{i}")
-            for i, t in enumerate(terms)
+            for i, t in enumerate(BM25_TERMS)
         ],
     )
 
@@ -203,11 +195,11 @@ def doc_bm25_topk(
         "dl",
         *[
             F.size(F.filter("t", _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(terms)
+            for i, t in enumerate(BM25_TERMS)
         ],
     )
 
-    score = _bm25_score(terms)
+    score = _bm25_score()
 
     return (
         tf.crossJoin(F.broadcast(stats))
@@ -472,31 +464,28 @@ def build_text_index(
     )
 
 
-#: (terms, n_buckets) -> sorted bucket ids. Memoized because the value
-#: is a PURE function of its key — bucket = pmod(xxhash64(term),
-#: n_buckets), a fixed hash of constant strings, independent of any
-#: data — yet computing it through the engine costs one collect() job
-#: per serve call. The first serve in a process pays the tiny job;
-#: every later serve (each lifecycle query serves once per run) reuses
-#: the arithmetic result (r16 optimization). NOT a data cache: nothing
-#: here derives from table contents.
-_TERM_BUCKET_MEMO: dict[tuple[tuple[str, ...], int], list[int]] = {}
+#: n_buckets -> sorted ids of the buckets BM25_TERMS hash to. Memoized
+#: because the value is a PURE function of its key — bucket =
+#: pmod(xxhash64(term), n_buckets), a fixed hash of constant strings,
+#: independent of any data — yet computing it through the engine costs
+#: one collect() job per serve call. The first serve in a process pays
+#: the tiny job; every later serve (each lifecycle query serves once per
+#: run) reuses the arithmetic result. NOT a data cache: nothing here
+#: derives from table contents.
+_TERM_BUCKET_MEMO: dict[int, list[int]] = {}
 
 
-def _term_buckets(
-    spark: SparkSession, terms: tuple[str, ...], n_buckets: int
-) -> list[int]:
-    """Bucket ids the query's terms hash to, via the ENGINE's own
-    xxhash64 (a Python reimplementation could drift from Spark's);
-    memoized per (terms, n_buckets) — see ``_TERM_BUCKET_MEMO``."""
-    key = (tuple(terms), n_buckets)
-    got = _TERM_BUCKET_MEMO.get(key)
+def _term_buckets(spark: SparkSession, n_buckets: int) -> list[int]:
+    """Bucket ids the BM25 terms hash to, via the ENGINE's own xxhash64
+    (a Python reimplementation could drift from Spark's); memoized per
+    n_buckets — see ``_TERM_BUCKET_MEMO``."""
+    got = _TERM_BUCKET_MEMO.get(n_buckets)
     if got is None:
         got = sorted(
             {
                 r["b"]
                 for r in spark.createDataFrame(
-                    [(t,) for t in terms], "term string"
+                    [(t,) for t in BM25_TERMS], "term string"
                 )
                 .select(
                     F.pmod(F.xxhash64("term"), F.lit(n_buckets))
@@ -506,16 +495,11 @@ def _term_buckets(
                 .collect()
             }
         )
-        _TERM_BUCKET_MEMO[key] = got
+        _TERM_BUCKET_MEMO[n_buckets] = got
     return got
 
 
-def bm25_index_topk(
-    spark: SparkSession,
-    index_path: str,
-    terms: tuple[str, ...] = BM25_TERMS,
-    k: int = BM25_TOPK,
-) -> DataFrame:
+def bm25_index_topk(spark: SparkSession, index_path: str) -> DataFrame:
     """BM25 top-k served from the MATERIALIZED index — bit-identical
     to the inline ``doc_bm25_topk`` (asserted in
     tests/test_retrieval.py): per-term tfs pivot into fixed columns by
@@ -532,9 +516,9 @@ def bm25_index_topk(
     _recover_corpus_stats(index_path)
     n_buckets = _index_buckets(index_path)  # the modulus the index was BUILT with
     postings = spark.read.parquet(f"{index_path}/postings")
-    buckets = _term_buckets(spark, terms, n_buckets)
+    buckets = _term_buckets(spark, n_buckets)
     hits = postings.where(
-        F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
+        F.col("bucket").isin(buckets) & F.col("term").isin(list(BM25_TERMS))
     )
     # df = DISTINCT docs per term (not row count): replay-duplicated
     # postings rows from a crash-retried refresh are exact copies, and
@@ -542,7 +526,7 @@ def bm25_index_topk(
     dfs = hits.groupBy("term").agg(
         F.count_distinct("doc_id").cast("bigint").alias("df")
     )
-    df_row = dfs.groupBy().pivot("term", list(terms)).agg(F.first("df"))
+    df_row = dfs.groupBy().pivot("term", list(BM25_TERMS)).agg(F.first("df"))
     # docs containing >=1 query term, with each term's tf as a column
     cand = hits.groupBy("doc_id").agg(
         *[
@@ -551,7 +535,7 @@ def bm25_index_topk(
             )
             .cast("bigint")
             .alias(f"tf{i}")
-            for i, t in enumerate(terms)
+            for i, t in enumerate(BM25_TERMS)
         ]
     )
     # Same defensive dedup as compact_text_index: two cross-HOST
@@ -573,19 +557,19 @@ def bm25_index_topk(
                 F.coalesce(F.col(f"`{t}`"), F.lit(0))
                 .cast("bigint")
                 .alias(f"df{i}")
-                for i, t in enumerate(terms)
+                for i, t in enumerate(BM25_TERMS)
             ]
         )
     )
 
-    score = _bm25_score(terms)
+    score = _bm25_score()
 
     return (
         cand.crossJoin(F.broadcast(stats))
         .select("doc_id", score.alias("bm25_score"))
         .where(F.col("bm25_score") > 0)
         .orderBy(F.desc("bm25_score"), "doc_id")
-        .limit(k)
+        .limit(BM25_TOPK)
     )
 
 
@@ -617,12 +601,7 @@ def doc_bm25_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def serve_bm25_topk(
-    spark: SparkSession,
-    index_path: str,
-    terms: tuple[str, ...] = BM25_TERMS,
-    k: int = BM25_TOPK,
-) -> DataFrame:
+def serve_bm25_topk(spark: SparkSession, index_path: str) -> DataFrame:
     """Concurrency-safe serve: plan AND materialize the k-row result
     under the index's maintenance lock (re-entrant), so a racing
     refresh/compact's two-rename swap can neither vanish a relation
@@ -635,7 +614,7 @@ def serve_bm25_topk(
     for plan inspection (partition-pruning tests) and single-writer
     callers."""
     with path_lock(index_path):
-        return eager_checkpoint(bm25_index_topk(spark, index_path, terms, k))
+        return eager_checkpoint(bm25_index_topk(spark, index_path))
 
 
 def _with_temp_index(spark: SparkSession, prefix: str, populate) -> DataFrame:

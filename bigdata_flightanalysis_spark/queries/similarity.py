@@ -331,13 +331,13 @@ def embed_near_dup_pairs(
     buckets): the registry entry pins the oracle-checked default; a
     corpus of n vectors wants roughly log2(n / target_bucket_size)
     planes or buckets run hot and the exact-cosine confirm pays a
-    quadratic per-bucket bill — measured 16x end-to-end at 100k
-    vectors going from 4 to 10 planes (174 s → 10.8 s,
-    scripts/scale_smoke.py). More planes
-    trade candidate RECALL for pruning (collision prob per pair is
-    (1-θ/π)^planes); production near-dup at low planes-recall runs
-    multiple tables, which is this same query unioned over disjoint
-    plane subsets."""
+    quadratic per-bucket bill — 174 s at 4 planes vs 10.8 s at 10
+    planes for 100k vectors (local[32]). The maintained-store scale
+    smoke (``scale_smoke.py --mode embstore``) passes planes derived
+    from its corpus size. More planes trade candidate RECALL for
+    pruning (collision prob per pair is (1-θ/π)^planes); production
+    near-dup at low planes-recall runs multiple tables, which is this
+    same query unioned over disjoint plane subsets."""
     from bigdata_flightanalysis_spark.operators.skew import blocked_self_pairs
 
     emb = read_table(spark, sf_dir, "embeddings")

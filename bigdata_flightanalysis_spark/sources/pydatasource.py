@@ -49,14 +49,16 @@ def _h(seed: int, doc_id: int, salt: int) -> int:
 
 def _word(seed: int, doc_id: int, i: int, vocab: int) -> str:
     h = _h(seed, doc_id, 1 + i)
-    # vocab=0 (default): the legacy 30-word list — ADVERSARIALLY dense
-    # for LSH (collision stress test). vocab=N>0: synthetic N-word
-    # vocabulary ("w0".."w{N-1}") — realistic web-corpus collision
-    # density, so the dup GRAPH stays proportional to the injected
-    # duplication instead of going corpus-quadratic; graph analytics
-    # (triangles/k-core) smoke at scale against this shape.
+    # vocab=0 (default): the legacy 31-word list — ADVERSARIALLY dense
+    # for LSH (collision stress test). vocab=N>0: an N-word vocabulary
+    # — realistic web-corpus collision density, so the dup GRAPH stays
+    # proportional to the injected duplication instead of going
+    # corpus-quadratic. Its first len(_WORDS) slots are the legacy
+    # words (so fixed-term queries like BM25 find postings), the rest
+    # "w<k>"; size and density are those of any N-word vocabulary.
     if vocab:
-        return f"w{h % vocab}"
+        k = h % vocab
+        return _WORDS[k] if k < len(_WORDS) else f"w{k}"
     return _WORDS[h % len(_WORDS)]
 
 

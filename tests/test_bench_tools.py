@@ -338,3 +338,34 @@ def test_budgeted_per_query_empty_maps():
     payload = json.loads(bench.budgeted_per_query({}, {}, "custom"))
     assert payload["queries"] == {} and payload["sweep"] == {}
     assert payload["sf"] == "custom"
+
+
+def test_spotcheck_queries_are_registered_and_share_oracles():
+    """Every spot-check query is a registry name, and the at-scale
+    fingerprint check it derives from shared oracles is never vacuous:
+    the five BM25 forms and the near-dup candidate twins each form one
+    group."""
+    from bigdata_flightanalysis_spark.queries.catalog import load_all
+
+    spec = importlib.util.spec_from_file_location(
+        "scaling_spotcheck_m",
+        Path(__file__).resolve().parents[1] / "scripts" / "scaling_spotcheck.py",
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    reg = load_all()
+    assert set(mod.QUERIES) <= set(reg)
+    groups = {frozenset(g) for g in mod.shared_oracle_groups(reg)}
+    assert frozenset(
+        {
+            "doc_bm25_topk",
+            "doc_bm25_index_topk",
+            "doc_bm25_refresh_topk",
+            "doc_bm25_compact_topk",
+            "doc_bm25_serve_topk",
+        }
+    ) in groups
+    assert (
+        frozenset({"doc_near_dup_candidates", "doc_near_dup_candidates_largemode"})
+        in groups
+    )

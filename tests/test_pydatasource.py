@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_flightanalysis_spark.sources.pydatasource import (
+    _WORDS,
     SyntheticDocsDataSource,
 )
 
@@ -143,9 +144,9 @@ def test_embeddings_source_determinism_and_near_dups(registered):
 
 
 def test_vocab_option_realistic_density(registered):
-    """vocab=N swaps the adversarial 30-word list for a synthetic
-    N-word vocabulary ("w0".."w{N-1}") — realistic collision density
-    for graph-analytics smokes. Same determinism contract; the
+    """vocab=N swaps the adversarial 31-word list for an N-word
+    vocabulary (the legacy words, then "w<k>") — realistic collision
+    density for graph-analytics runs. Same determinism contract; the
     near-dup injection (every 10th doc clones its predecessor) must
     survive the vocabulary switch."""
     a = sorted(
@@ -160,7 +161,8 @@ def test_vocab_option_realistic_density(registered):
     rows = {r[0]: r[1] for r in a}
     assert rows[9] == rows[8] and rows[199] == rows[198]  # clones intact
     words = set(rows[0].split()) | set(rows[7].split())
-    assert all(w.startswith("w") and w[1:].isdigit() for w in words)
+    declared = set(_WORDS) | {f"w{k}" for k in range(len(_WORDS), 5000)}
+    assert words <= declared
     # default (vocab absent) is unchanged — legacy wordlist
     legacy = _read(registered, rows=10, partitions=2).collect()
     assert any(
